@@ -26,8 +26,8 @@ def entry(spark: SparkSession) -> DataFrame:
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator from SURVEY.md §2, in
-    registry.DRIVER_ORDER (operators the driver has not yet checked
-    come first)."""
+    registry.driver_order: ids failing their newest CORRECTNESS row
+    first, then never-checked ids, then the oldest certified."""
     return {name: spec.fn for name, spec in ordered_specs().items()}
 
 

@@ -156,9 +156,3 @@ def ts_micros(col: Column | str) -> Column:
     """Timestamp → epoch microseconds (bigint). Oracle: ``epoch_us(ts)``."""
     c = F.col(col) if isinstance(col, str) else col
     return F.unix_micros(c)
-
-
-def to_date_col(col: Column | str) -> Column:
-    """Date-valued timestamp → DATE (testdata stores dates as timestamps)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.to_date(c)

@@ -385,13 +385,3 @@ def local_rows(spark: SparkSession, rows, schema) -> DataFrame:
     )
     pdf = pd.DataFrame(list(rows), columns=st.names)
     return spark.createDataFrame(pdf, schema=st)
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: table(spark, sf_dir, name) for name in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every table as a temp view for ``spark.sql`` queries."""
-    for name in TABLES:
-        table(spark, sf_dir, name).createOrReplaceTempView(name)

@@ -128,22 +128,6 @@ def assign(
     return df.select(*cols)
 
 
-def update(
-    df: DataFrame, feature_col: str = "features", cluster_col: str = "cluster"
-) -> DataFrame:
-    """Per-cluster element-wise mean (ref A10, ``src/Kmeans.java:101-112``)
-    via posexplode + hash agg: only (cluster, dim) partial sums shuffle."""
-    ex = df.select(
-        cluster_col, F.posexplode(feature_col).alias("pos", "v")
-    ).withColumn("v", F.col("v").cast("double"))
-    per_dim = ex.groupBy(cluster_col, "pos").agg(F.avg("v").alias("mv"))
-    return per_dim.groupBy(cluster_col).agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "mv"))), lambda s: s.mv
-        ).alias("centroid")
-    )
-
-
 @dataclass
 class KMeansResult:
     centers: list[list[float]]

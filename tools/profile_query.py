@@ -98,10 +98,14 @@ def main() -> None:
             t0 = time.perf_counter()
             try:
                 specs[name].fn(spark, args.sf)
+                wall = time.perf_counter() - t0
             except Exception as e:  # streaming-only ops etc.
                 print(f"?? {name}: build failed: {e}")
                 continue
-            wall = time.perf_counter() - t0
+            finally:
+                # every build starts from an empty block store: freezes
+                # left live by earlier queries would skew later builds
+                materialize.release_all()
             seg = sum(s for _, s in SEG_TIMES)
             ranked.append((wall - seg, seg, name))
         ranked.sort(reverse=True)

@@ -43,6 +43,7 @@ from __future__ import annotations
 
 import argparse
 import os
+import re
 import sys
 import time
 
@@ -50,6 +51,7 @@ sys.path.insert(0, ".")
 
 from pyspark.sql import functions as F
 
+from nchu_bigdata_spark.io import TABLES
 from nchu_bigdata_spark.registry import load_all_queries
 from nchu_bigdata_spark.session import get_session
 
@@ -78,6 +80,28 @@ HEAVY_OPS = [
 
 # Tables each op reads (everything else is symlinked unchanged).
 BLOWN_TABLES = {"lineitem", "documents", "events", "orders", "embeddings"}
+
+
+def link_base_tables(out_dir: str) -> None:
+    """Symlink every sf0.1 entry not yet present in ``out_dir``.
+    Idempotent, so it runs on every probe, not only after a build: a
+    crash between a blown table's ``_SUCCESS`` and these links heals on
+    the next run instead of leaving missing tables."""
+    for f in os.listdir(BASE_SF):
+        link = os.path.join(out_dir, f)
+        if not os.path.lexists(link):
+            os.symlink(os.path.abspath(os.path.join(BASE_SF, f)), link)
+
+
+def lineitem_only(spec) -> bool:
+    """Whether ``spec`` reads lineitem alone, judged by the tables its
+    DuckDB oracle names (the oracle reads what the query reads). Only
+    such ops are meaningful on the lineitem-only blow-up: a join to
+    part/orders there drops 99% of keys."""
+    if spec.oracle is None:
+        return False
+    named = {t for t in TABLES if re.search(rf"\b{t}\b", spec.oracle)}
+    return named == {"lineitem"}
 
 
 def build_10x(spark, out_dir: str) -> None:
@@ -216,10 +240,10 @@ def build_docs_nx(spark, out_dir: str, copies: int) -> None:
     for copies ≥ 1 (copies share no shingles — same construction as
     build_10x's documents leg, expressed as ONE broadcast
     copy-expansion join instead of a copies-way union so a 100-branch
-    plan never materializes). Everything but documents is symlinked
-    unchanged. SHIFT stays divisible by the doc_id % 10 / % 20 split
-    moduli, so e.g. dedup_incremental's corpus/batch split replicates
-    per copy."""
+    plan never materializes). Everything but documents is linked by
+    ``link_base_tables``. SHIFT stays divisible by the doc_id % 10 /
+    % 20 split moduli, so e.g. dedup_incremental's corpus/batch split
+    replicates per copy."""
     os.makedirs(out_dir, exist_ok=True)
     docs = spark.read.parquet(os.path.join(BASE_SF, "documents.parquet"))
     cp = F.col("cp")
@@ -247,10 +271,6 @@ def build_docs_nx(spark, out_dir: str, copies: int) -> None:
     big.repartition(32).write.mode("overwrite").parquet(
         os.path.join(out_dir, "documents.parquet")
     )
-    for f in os.listdir(BASE_SF):
-        link = os.path.join(out_dir, f)
-        if not os.path.lexists(link):
-            os.symlink(os.path.join(BASE_SF, f), link)
 
 
 def build_lineitem_nx(spark, out_dir: str, copies: int) -> None:
@@ -262,31 +282,42 @@ def build_lineitem_nx(spark, out_dir: str, copies: int) -> None:
     disjoint isomorphic subgraphs — no new hubs, |V| and |E| exactly
     ×copies. Key dtypes are cast back to the source schema so the
     blown table is byte-compatible (100×SHIFT = 10⁹ still fits int32).
-    Everything but lineitem symlinks to sf0.1 unchanged."""
-    os.makedirs(out_dir, exist_ok=True)
-    li = spark.read.parquet(os.path.join(BASE_SF, "lineitem.parquet"))
-    ok_t = li.schema["l_orderkey"].dataType.simpleString()
-    pk_t = li.schema["l_partkey"].dataType.simpleString()
-    cp = F.col("cp")
-    big = (
-        li.crossJoin(
-            F.broadcast(spark.range(copies).withColumnRenamed("id", "cp"))
+    Skipped when a previous run finished the table; everything but
+    lineitem is linked by ``link_base_tables`` either way."""
+    # _SUCCESS, not the dir: a crash mid-write must not leave a
+    # partial lineitem.parquet a bare-dir check would adopt
+    done = os.path.join(out_dir, "lineitem.parquet", "_SUCCESS")
+    if not os.path.exists(done):
+        t0 = time.perf_counter()
+        os.makedirs(out_dir, exist_ok=True)
+        li = spark.read.parquet(os.path.join(BASE_SF, "lineitem.parquet"))
+        ok_t = li.schema["l_orderkey"].dataType.simpleString()
+        pk_t = li.schema["l_partkey"].dataType.simpleString()
+        cp = F.col("cp")
+        big = (
+            li.crossJoin(
+                F.broadcast(
+                    spark.range(copies).withColumnRenamed("id", "cp")
+                )
+            )
+            .withColumn(
+                "l_orderkey",
+                (F.col("l_orderkey") + cp * F.lit(SHIFT)).cast(ok_t),
+            )
+            .withColumn(
+                "l_partkey",
+                (F.col("l_partkey") + cp * F.lit(SHIFT)).cast(pk_t),
+            )
+            .drop("cp")
         )
-        .withColumn(
-            "l_orderkey", (F.col("l_orderkey") + cp * F.lit(SHIFT)).cast(ok_t)
+        big.repartition(32).write.mode("overwrite").parquet(
+            os.path.join(out_dir, "lineitem.parquet")
         )
-        .withColumn(
-            "l_partkey", (F.col("l_partkey") + cp * F.lit(SHIFT)).cast(pk_t)
+        print(
+            f"built lineitem {copies}x in {time.perf_counter()-t0:.1f}s",
+            flush=True,
         )
-        .drop("cp")
-    )
-    big.repartition(32).write.mode("overwrite").parquet(
-        os.path.join(out_dir, "lineitem.parquet")
-    )
-    for f in os.listdir(BASE_SF):
-        link = os.path.join(out_dir, f)
-        if not os.path.lexists(link):
-            os.symlink(os.path.abspath(os.path.join(BASE_SF, f)), link)
+    link_base_tables(out_dir)
 
 
 def build_embed_synth(spark, out_dir: str, n: int) -> None:
@@ -370,7 +401,8 @@ def main() -> int:
         "gating the 10x->100x STEP ratio for the persist-reworked "
         "iterative kernels (default graph_pagerank + "
         "graph_connected_components — the cached-|E| freeze must "
-        "degrade gracefully, not OOM, as |E| outgrows memory share)",
+        "degrade gracefully, not OOM, as |E| outgrows memory share); "
+        "--ops may name lineitem-only ops only",
     )
     ap.add_argument(
         "--geo10x",
@@ -394,9 +426,18 @@ def main() -> int:
         if args.ops is not None
         else list(HEAVY_OPS)
     )
+    specs = load_all_queries()
+    if args.graph100x and args.ops is not None:
+        bad = [
+            o for o in ops if o not in specs or not lineitem_only(specs[o])
+        ]
+        if bad:
+            ap.error(
+                "--graph100x blows up lineitem only; these ops read "
+                f"other tables (or are unknown): {', '.join(bad)}"
+            )
 
     spark = get_session("scale-probe")
-    specs = load_all_queries()
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     big_dir = os.path.join(repo, ".scratch", "scale10x")
 
@@ -445,6 +486,7 @@ def main() -> int:
                     f"built docs {n}x in {time.perf_counter()-t0:.1f}s",
                     flush=True,
                 )
+            link_base_tables(d)
             arms.append((f"{n}x", d))
         import bench
 
@@ -472,17 +514,7 @@ def main() -> int:
         arms = []
         for n in (10, 100):
             d = os.path.join(repo, ".scratch", f"li{n}x")
-            # _SUCCESS, not the dir: a crash mid-write must not leave a
-            # partial lineitem.parquet a bare-dir check would adopt
-            if not os.path.exists(
-                os.path.join(d, "lineitem.parquet", "_SUCCESS")
-            ):
-                t0 = time.perf_counter()
-                build_lineitem_nx(spark, d, n)
-                print(
-                    f"built lineitem {n}x in {time.perf_counter()-t0:.1f}s",
-                    flush=True,
-                )
+            build_lineitem_nx(spark, d, n)
             arms.append((f"{n}x", d))
         import bench
 
@@ -536,10 +568,7 @@ def main() -> int:
             big.write.mode("overwrite").parquet(
                 os.path.join(d, "customer.parquet")
             )
-            for f in os.listdir(BASE_SF):
-                link = os.path.join(d, f)
-                if not os.path.lexists(link):
-                    os.symlink(os.path.join(BASE_SF, f), link)
+        link_base_tables(d)
         import bench
 
         bench.warm(spark)
@@ -605,12 +634,7 @@ def main() -> int:
             big.write.mode("overwrite").parquet(
                 os.path.join(d, "events.parquet")
             )
-        # symlinks repaired unconditionally (idempotent via lexists):
-        # a partial earlier run must not leave missing tables forever
-        for f in os.listdir(BASE_SF):
-            link = os.path.join(d, f)
-            if not os.path.lexists(link):
-                os.symlink(os.path.join(BASE_SF, f), link)
+        link_base_tables(d)
         import bench
 
         bench.warm(spark)
