@@ -32,7 +32,6 @@ def __getattr__(name: str):
     lazy = {
         "kmeans_fit": ("nchu_bigdata_spark.operators.kmeans", "fit"),
         "kmeans_assign": ("nchu_bigdata_spark.operators.kmeans", "assign"),
-        "kmeans_label": ("nchu_bigdata_spark.operators.kmeans", "label"),
         "connected_components": (
             "nchu_bigdata_spark.operators.dedup",
             "connected_components",
@@ -74,7 +73,6 @@ __all__ = [
     "QuerySpec",
     "kmeans_fit",
     "kmeans_assign",
-    "kmeans_label",
     "connected_components",
     "asof_join",
     "run_events_stream",

@@ -157,18 +157,21 @@ def run(
 
     assigned = km.assign(df, prev, "features", "sq_euclidean_abs")
     means = sequential_cluster_means(assigned).collect()  # k×dim scalars
+    dim = len(prev[0])
     centers: dict[int, list[float]] = {}
     for r in means:
-        centers.setdefault(r["cluster"], [0.0] * (max(m["pos"] for m in means) + 1))
-        centers[r["cluster"]][r["pos"]] = float(r["mv"])
+        centers.setdefault(r["cluster"], [0.0] * dim)[r["pos"]] = float(r["mv"])
     # Empty clusters keep their previous centroid (reference reducers
     # never see empty groups).
     for i, c in enumerate(prev, start=1):
         centers.setdefault(i, list(c))
 
-    # Final map-only labeling with the final centers.
+    # Final map-only labeling with the final centers; ``d`` is each
+    # row's distance to its own (nearest) center.
     final_centers = [centers[i] for i in sorted(centers)]
-    labeled = km.assign(df, final_centers, "features", "sq_euclidean_abs")
+    labeled = km.assign(
+        df, final_centers, "features", "sq_euclidean_abs", dist_col="d"
+    )
     (
         labeled.select(
             F.concat_ws("\t", F.col("cluster").cast("string"), F.col("line"))
@@ -179,25 +182,11 @@ def run(
 
     # Representative day per cluster: CORRECT argmin of the reference's
     # rep-day metric (plain squared distance on abs values,
-    # src/Kmeans.java:119-124); ties break to the lowest line id. ONE
-    # job for all clusters: the per-row distance to its own cluster's
-    # center is a literal-center CASE expression (same codegen style as
-    # assign), then a single ``min_by(obs_date, (d, line_id))`` agg —
-    # k rows out, instead of k sequential .first() jobs.
-    from nchu_bigdata_spark.operators.vectors import sq_euclidean_abs
-
-    d_own: F.Column | None = None
-    for cid in sorted(centers):
-        lit_c = F.array(*[F.lit(float(v)) for v in centers[cid]])
-        d_cid = sq_euclidean_abs(F.col("features"), lit_c)
-        d_own = (
-            F.when(F.col("cluster") == cid, d_cid)
-            if d_own is None
-            else d_own.when(F.col("cluster") == cid, d_cid)
-        )
+    # src/Kmeans.java:119-124) — the same metric as the assignment, so
+    # the labeling's own ``d`` is the distance to the cluster's center.
+    # Ties break to the lowest line id; one agg job for all clusters.
     rep_rows = (
-        labeled.withColumn("d", d_own)
-        .groupBy("cluster")
+        labeled.groupBy("cluster")
         .agg(F.min_by("obs_date", F.struct("d", "line_id")).alias("obs_date"))
         .collect()
     )

@@ -68,18 +68,25 @@ def _release(sc, rdd_ids: list[int]) -> None:
             rdd.unpersist(False)
 
 
+def _capture_plan(tag: str, df: DataFrame) -> None:
+    """Record ``df``'s formatted plan under ``tag`` when the plan audit
+    has switched ``CAPTURE_SEGMENT_PLANS`` on."""
+    if not CAPTURE_SEGMENT_PLANS:
+        return
+    import io as _io
+    from contextlib import redirect_stdout
+
+    buf = _io.StringIO()
+    with redirect_stdout(buf):
+        df.explain("formatted")
+    SEGMENT_PLANS[tag] = buf.getvalue()
+
+
 def shared_intermediate(tag: str, df: DataFrame, eager: bool = True) -> DataFrame:
     """Eagerly ``localCheckpoint`` ``df`` as the single live generation
     for ``tag``, releasing the previous generation's blocks."""
     sc = df.sparkSession.sparkContext
-    if CAPTURE_SEGMENT_PLANS:
-        import io as _io
-        from contextlib import redirect_stdout
-
-        buf = _io.StringIO()
-        with redirect_stdout(buf):
-            df.explain("formatted")
-        SEGMENT_PLANS[tag] = buf.getvalue()
+    _capture_plan(tag, df)
     before = _persistent_ids(sc)
     out = df.localCheckpoint(eager=eager)
     new_ids = sorted(_persistent_ids(sc) - before)
@@ -117,15 +124,7 @@ def shared_partitioned(tag: str, df: DataFrame) -> DataFrame:
     cache manager keys entries by analyzed plan, so for the common
     rebuild-the-same-plan case an unpersist after the new persist
     would evict the block the new generation just registered."""
-    spark = df.sparkSession
-    if CAPTURE_SEGMENT_PLANS:
-        import io as _io
-        from contextlib import redirect_stdout
-
-        buf = _io.StringIO()
-        with redirect_stdout(buf):
-            df.explain("formatted")
-        SEGMENT_PLANS[tag] = buf.getvalue()
+    _capture_plan(tag, df)
     prev = _LIVE_DF.pop(tag, None)
     if prev is not None:
         try:

@@ -106,10 +106,9 @@ def assign(
     (``src/Kmeans.java:79``).
 
     The whole projection is one ``F.expr`` SQL string (see
-    ``distance_sql``): identical semantics to the Column-API build, but
-    plan construction is a single Py4J call instead of O(k·dim)
-    round-trips — at k=4/dim=64 that halves per-iteration wall time in
-    ``fit`` (0.37 s build → ~0.01 s).
+    ``distance_sql``): plan construction is a single Py4J call instead
+    of O(k·dim) round-trips — at k=4/dim=64 that halves per-iteration
+    wall time in ``fit`` (0.37 s build → ~0.01 s).
     """
     vec_sql = f"transform(`{feature_col}`, v_ -> CAST(v_ AS DOUBLE))"
     pairs = ", ".join(
@@ -197,16 +196,6 @@ def fit(
         return KMeansResult(centers, it, costs, converged)
     finally:
         df.unpersist()
-
-
-def label(
-    df: DataFrame,
-    centers: list[list[float]],
-    feature_col: str = "features",
-    metric: Metric = "sq_euclidean",
-) -> DataFrame:
-    """Final map-only labeling pass (ref A15, ``src/Kmeans.java:148-153``)."""
-    return assign(df, centers, feature_col, metric)
 
 
 # --------------------------------------------------------------------------
@@ -379,7 +368,7 @@ def kmeans_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         max_iter=5,
         metric="sq_euclidean",
     )
-    labeled = label(emb.withColumnRenamed("embedding", "features"), res.centers)
+    labeled = assign(emb.withColumnRenamed("embedding", "features"), res.centers)
     sizes = labeled.groupBy("cluster").agg(F.count(F.lit(1)).alias("n"))
     # math.sqrt (correctly-rounded IEEE, same as DuckDB's sqrt) over a
     # left-fold sum — mirrors the oracle's sqrt(list_sum(...)); the
@@ -512,8 +501,8 @@ def kmeans_init_parallel(spark: SparkSession, sf_dir: str) -> DataFrame:
     `kmeans_fit`'s certified Lloyd replay.
 
     Plan/scale: per round ONE narrow scan with the candidate set
-    fused as literal projections (`distance_sql` — no join, no
-    shuffle), one map-side-combined 1-row phi aggregate, and one
+    fused as literal projections (`assign`'s min distance — no join,
+    no shuffle), one map-side-combined 1-row phi aggregate, and one
     expected-l-row candidate collect (the sanctioned ≤k-row driver
     state every kmeans op uses); the final weighting is the standard
     `assign` literal projection plus ONE keyed agg. Nothing
@@ -534,22 +523,14 @@ def kmeans_init_parallel(spark: SparkSession, sf_dir: str) -> DataFrame:
     cands: list[tuple[int, int, list[float]]] = [
         (int(seed[0]["vec_id"]), 0, [float(x) for x in seed[0]["embedding"]])
     ]
-    vec_sql = "transform(embedding, v_ -> CAST(v_ AS DOUBLE))"
     for t in range(1, _INIT_ROUNDS + 1):
-        d2min = (
-            "array_min(array("
-            + ", ".join(
-                distance_sql(c, vec_sql, "sq_euclidean")
-                for _, _, c in cands
-            )
-            + "))"
-        )
-        u = emb.select(
+        u = assign(
+            emb, [c for _, _, c in cands], "embedding", "sq_euclidean",
+            dist_col="d2",
+        ).select(
             "vec_id",
             "embedding",
-            F.expr(
-                f"CAST(FLOOR({d2min} * {_INIT_SCALE}) AS BIGINT)"
-            ).alias("d2u"),
+            F.expr(f"CAST(FLOOR(d2 * {_INIT_SCALE}) AS BIGINT)").alias("d2u"),
         )
         phi = int(
             u.agg(

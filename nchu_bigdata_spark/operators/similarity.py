@@ -98,7 +98,7 @@ def _vecs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _dot(a: str, b: str) -> Column:
+def _dot(a: str | Column, b: str | Column) -> Column:
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, z: acc + z
     )
@@ -2198,16 +2198,8 @@ def embed_matryoshka_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     tq = F.expr("slice(qv, 1, k_dims)")
     tc = F.expr("slice(cv, 1, k_dims)")
-
-    def dot(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, z: acc + z,
-        )
-
     tcos = F.round(
-        dot(tq, tc) / (F.sqrt(dot(tq, tq)) * F.sqrt(dot(tc, tc))), 6
+        _dot(tq, tc) / (F.sqrt(_dot(tq, tq)) * F.sqrt(_dot(tc, tc))), 6
     ).cast("decimal(18,6)")
     d = withv.select(
         "k_dims",

@@ -80,6 +80,26 @@ def _parse_golden_assignments() -> dict[str, int]:
     return out
 
 
+def _sq_abs(a: list[float], b: list[float]) -> float:
+    """The reference's metric, Σ (|a_j| − |b_j|)² (``src/Kmeans.java:66-70``),
+    in plain Python — independent of the engine's distance kernel."""
+    return sum((abs(x) - abs(y)) * (abs(x) - abs(y)) for x, y in zip(a, b))
+
+
+def _representative_dates(
+    rows: list[tuple[int, str, list[float]]], centers: dict[int, list[float]]
+) -> dict[int, str]:
+    """cluster -> date of the member row closest to that cluster's center.
+    ``rows`` are (cluster, date, features) in input-line order; ties keep
+    the lowest line."""
+    best: dict[int, tuple[float, str]] = {}
+    for cluster, date, features in rows:
+        d = _sq_abs(features, centers[cluster])
+        if cluster not in best or d < best[cluster][0]:
+            best[cluster] = (d, date)
+    return {c: date for c, (_, date) in best.items()}
+
+
 @pytest.fixture(scope="module")
 def pm25_fit(spark):
     df = _load_pm25(spark)
@@ -91,7 +111,7 @@ def pm25_fit(spark):
         df, init, feature_col="features", metric="sq_euclidean_abs",
         max_iter=5, tol=None,
     )
-    labeled = kmeans.label(df, res.centers, "features", "sq_euclidean_abs")
+    labeled = kmeans.assign(df, res.centers, "features", "sq_euclidean_abs")
     return res, labeled
 
 
@@ -139,44 +159,22 @@ def test_representative_day_divergence_documented(pm25_fit):
     res, labeled = pm25_fit
     golden = _parse_golden_centers()
     golden_assign = _parse_golden_assignments()
-    from nchu_bigdata_spark.operators.vectors import sq_euclidean_abs
-
-    centers_arr = {
-        i + 1: c for i, c in enumerate(res.centers)
-    }
+    centers = {i + 1: c for i, c in enumerate(res.centers)}
+    rows = sorted(
+        (r["cluster"], r["obs_date"], r["features"])
+        for r in labeled.select("cluster", "obs_date", "features").collect()
+    )
+    features = {date: f for _, date, f in rows}
+    reps = _representative_dates(rows, centers)
     for cluster_id, (gdate, _) in enumerate(golden, start=1):
         # the buggy golden label still belongs to that cluster
         assert golden_assign[gdate] == cluster_id
-        # our correct representative: true argmin of distance to centroid
-        c = centers_arr[cluster_id]
-        lit_center = F.array(*[F.lit(float(v)) for v in c])
-        member = (
-            labeled.filter(F.col("cluster") == cluster_id)
-            .withColumn(
-                "d",
-                sq_euclidean_abs(
-                    F.transform("features", lambda x: x.cast("double")),
-                    lit_center,
-                ),
-            )
-            .orderBy("d", "obs_date")
-            .select("obs_date", "d")
-            .first()
+        # our correct representative is a true minimizer: no farther
+        # from the centroid than the golden label
+        c = centers[cluster_id]
+        assert _sq_abs(features[reps[cluster_id]], c) <= _sq_abs(
+            features[gdate], c
         )
-        # sanity: the true argmin distance is <= the golden label's distance
-        gd = (
-            labeled.filter(F.col("obs_date") == gdate)
-            .withColumn(
-                "d",
-                sq_euclidean_abs(
-                    F.transform("features", lambda x: x.cast("double")),
-                    lit_center,
-                ),
-            )
-            .select("d")
-            .first()["d"]
-        )
-        assert member["d"] <= gd
 
 
 def _draft_subset(spark):
@@ -240,7 +238,7 @@ def test_draft_variant_assignments_match_golden(spark):
         pts, seeds, feature_col="features", metric="normalized_sq",
         max_iter=30, tol=0.0,
     )
-    labeled = kmeans.label(pts, res.centers, "features", "normalized_sq")
+    labeled = kmeans.assign(pts, res.centers, "features", "normalized_sq")
     ours = {
         r["line"]: r["cluster"]
         for r in labeled.select("line", "cluster").collect()
@@ -270,7 +268,8 @@ def test_cli_reproduces_reference_run(spark, tmp_path):
       ``Double.toString`` ≡ Python ``repr`` shortest round-trip).
       The representative DATE field is the documented A11 divergence
       (the reference's argmin never updates its running min,
-      ``src/Kmeans.java:125-127``) and is excluded."""
+      ``src/Kmeans.java:125-127``), so it is checked instead against a
+      pure-Python argmin over the emitted assignments and centers."""
     from nchu_bigdata_spark import kmeans as cli
 
     out = str(tmp_path / "kmeans_out")
@@ -297,6 +296,10 @@ def test_cli_reproduces_reference_run(spark, tmp_path):
     ) as f:
         golden_lines = [l.rstrip("\n") for l in f if l.strip()]
     assert sorted(emitted) == sorted(golden_lines)
+    cluster_of = {}
+    for l in emitted:
+        cluster, row = l.split("\t")
+        cluster_of[row] = int(cluster)
 
     # -- centers.txt vs pm25.cluster.center.conf.txt.hdfs golden --
     with open(os.path.join(out, "centers.txt"), encoding="utf-8") as f:
@@ -306,6 +309,22 @@ def test_cli_reproduces_reference_run(spark, tmp_path):
     ) as f:
         golden = [l.rstrip("\n") for l in f if l.strip()]
     assert len(ours) == len(golden) == 4
+    # -- representative dates: argmin of each cluster's member distance
+    # to its emitted center, ties to the lowest input line --
+    centers = {
+        i: [float(v) for v in line.split("PM25,", 1)[1].split(", ")]
+        for i, line in enumerate(ours, start=1)
+    }
+    with open(os.path.join(FIXTURES, "pm25.txt"), encoding="utf-8") as f:
+        rows = [
+            (cluster_of[row], row.split(",")[0],
+             [float(x) for x in row.split(",")[3:]])
+            for row in (l.rstrip("\n") for l in f if l.strip())
+        ]
+    reps = _representative_dates(rows, centers)
+    dates = [line[1:].split(",", 1)[0] for line in ours]
+    assert dates == [reps[i] for i in sorted(reps)]
+    assert dates == ["2015/09/20", "2015/04/30", "2015/12/28", "2015/11/01"]
     for mine, gold in zip(ours, golden):
         # structure: \t<date>,大里,PM25,<values>
         assert mine.startswith("\t") and gold.startswith("\t")
