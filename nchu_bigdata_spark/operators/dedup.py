@@ -38,6 +38,8 @@ floats), so results are bit-stable regardless of partial-agg order.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -96,37 +98,73 @@ def shingle_set(text: Column | None = None) -> Column:
     )
 
 
-def _doc_shingle_h32(docs: DataFrame) -> DataFrame:
-    """(doc_id, h) exploded distinct 32-bit shingle hashes. MinHash and
-    its Jaccard verification only ever need shingle *identity*, never
-    the text, so hashing at materialization time (one md5 per shingle,
-    computed exactly once) shrinks the persisted intermediate to two
-    int64 columns and makes every downstream join/agg key a long.
+def _doc_shingle_hashes(
+    docs: DataFrame, hash_fn: Callable[[Column], Column]
+) -> DataFrame:
+    """(doc_id, h) exploded distinct shingle hashes, ``h = hash_fn(shingle)``.
+    MinHash and Jaccard verification only ever need shingle *identity*,
+    never the text, so hashing at materialization time (one md5 per
+    shingle, computed exactly once) shrinks the persisted intermediate
+    to two int64 columns and makes every downstream join/agg key a long.
     ``array_distinct`` after hashing keeps per-doc sets exact even if
-    two shingles collide in 32 bits — the oracle applies the same
-    DISTINCT so both engines agree bit-for-bit. 32 bits are REQUIRED
-    here (not just convenient): the universal-hash MinHash family needs
-    h < 2^32 so A*h stays below 2^62 without int64 overflow."""
-    hs = F.array_distinct(F.transform(shingle_set(), _h32))
+    two shingles collide — the oracle applies the same DISTINCT so both
+    engines agree bit-for-bit.
+
+    The width is the caller's choice:
+      * ``_h32`` for MinHash signatures — REQUIRED, not just convenient:
+        the universal-hash family needs h < 2^32 so A*h stays below 2^62
+        without int64 overflow.
+      * ``_h60`` for exact-Jaccard tables — cross-doc 32-bit collisions
+        count as spurious intersections and same-doc collisions shrink
+        set sizes, drifting the emitted Jaccard above the true shingle
+        Jaccard at corpus scale (millions of distinct shingles make
+        32-bit collisions routine). At 60 bits the collision probability
+        is negligible while the join key stays a plain int64."""
+    hs = F.array_distinct(F.transform(shingle_set(), hash_fn))
     return (
         docs.filter(F.size(F.split("text", " ")) >= _K)
         .select("doc_id", F.explode(hs).alias("h"))
     )
 
 
-def _doc_shingle_h60(docs: DataFrame) -> DataFrame:
-    """(doc_id, h) exploded distinct 60-bit shingle hashes — the
-    identity/verification table for ``dedup_ngram_jaccard``. 60-bit
-    keys instead of 32: cross-doc 32-bit collisions count as spurious
-    intersections and same-doc collisions shrink set sizes, drifting
-    the emitted Jaccard above the true shingle Jaccard at corpus scale
-    (millions of distinct shingles make 32-bit collisions routine).
-    At 60 bits the collision probability is negligible while the join
-    key stays a plain int64 — identical plan shape and wire cost."""
-    hs = F.array_distinct(F.transform(shingle_set(), _h60))
-    return (
-        docs.filter(F.size(F.split("text", " ")) >= _K)
-        .select("doc_id", F.explode(hs).alias("h"))
+def _minhash_signature(sh: DataFrame) -> DataFrame:
+    """(doc_id, m0..m31) MinHash signatures of exploded ``(doc_id, h)``
+    32-bit shingle hashes: ``m_i = min((A[i]*h + B[i]) mod P)``, the only
+    Spark-side MinHash arithmetic (the oracles replay it in ``_SQL_MH_CORE``).
+
+    The ``_H`` permutations are parallel ``min`` aggregates of a single
+    ``groupBy(doc_id)`` — no ×``_H`` row blowup, no (doc_id, i) composite
+    shuffle key; partial mins collapse map-side so one signature row per
+    doc crosses the wire. Each min is one SQL expression string (one
+    Py4J call) instead of a stack of Column objects — identical
+    semantics, measurably cheaper plan construction per build (the
+    kmeans ``assign()`` precedent)."""
+    return sh.groupBy("doc_id").agg(
+        *[
+            F.expr(f"min(({_A[i]} * h + {_B[i]}) % {_P})").alias(f"m{i}")
+            for i in range(_H)
+        ]
+    )
+
+
+def _band_rows(
+    sig: DataFrame, bands: int = _BANDS, rows: int = _ROWS
+) -> DataFrame:
+    """(doc_id, band_id, band_key) LSH band rows of a ``_minhash_signature``
+    frame: band ``b`` keys on ``md5`` of its ``rows`` minhashes
+    ``m{b*rows}..`` joined with ``,`` (the oracle's ``string_agg``).
+    ``bands × rows`` must not exceed ``_H``. The key array is one SQL
+    expression (one Py4J call), posexploded into the band self-join's
+    (doc_id + 16-byte key) rows."""
+    keys = ", ".join(
+        "md5(concat_ws(',', {}))".format(
+            ", ".join(f"CAST(m{b * rows + r} AS STRING)" for r in range(rows))
+        )
+        for b in range(bands)
+    )
+    return sig.select(
+        "doc_id",
+        F.posexplode(F.expr(f"array({keys})")).alias("band_id", "band_key"),
     )
 
 
@@ -225,7 +263,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     stop-shingle df cutoff.
 
     Every join/agg key is an int64 60-bit shingle hash (one md5 per
-    shingle at materialization, ``_doc_shingle_h60``) — at corpus
+    shingle at materialization, ``_doc_shingle_hashes``) — at corpus
     scale, shuffling fixed 8-byte hashes instead of arbitrary-length
     shingle STRINGS is the difference between wire volume proportional
     to token bytes and to row count; 60 bits (not 32) keeps hash
@@ -289,7 +327,9 @@ def _shingle_pair_stats(
     (df > ``_MAX_DF``) shingle sets. See ``dedup_ngram_jaccard`` for
     the plan rationale (df-split separable intersection)."""
     docs = parallel_table(spark, sf_dir, "documents")
-    sh = shared_intermediate(f"{tag}.shingles", _doc_shingle_h60(docs))
+    sh = shared_intermediate(
+        f"{tag}.shingles", _doc_shingle_hashes(docs, _h60)
+    )
     dfs = sh.groupBy("h").agg(F.count(F.lit(1)).alias("df"))
     # df-annotated shingle rows: feeds the rare index (twice, as the
     # self-join's two sides) and the per-doc stats agg — AQE splits any
@@ -424,14 +464,11 @@ def dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     any band bucket become candidates, then exact Jaccard ≥ {t} verifies.
 
     Plan: one md5 per shingle (hashed at materialization; downstream
-    only ever sees int64 keys), then the {h} permutations are mult-adds
-    over that base hash computed as {h} parallel ``min`` aggregates of a
-    single ``groupBy(doc_id)`` — no ×{h} row blowup, no (doc_id, i)
-    composite shuffle key; partial mins collapse map-side so only one
-    {h}-long signature row per doc crosses the wire. Band keys are
-    derived column-wise from the signature row and posexploded into the
-    tiny band self-join (doc_id + 16-byte key rows). No floats anywhere
-    until the final reported Jaccard, so signatures are bit-stable.
+    only ever sees int64 keys), then the shared MinHash kernel:
+    ``_minhash_signature`` (one signature row per doc, {h} parallel
+    ``min`` aggregates) and ``_band_rows`` (band keys posexploded into
+    the tiny band self-join). No floats anywhere until the final
+    reported Jaccard, so signatures are bit-stable.
 
     The exploded (doc_id, h) shingle-hash rows are materialized once
     (tagged eager ``localCheckpoint`` with bounded generations,
@@ -448,33 +485,10 @@ def dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # of re-running split/transform/md5 per consumer. One live generation
     # per tag (materialize.py): no storage accumulation across repeated
     # invocations.
-    sh = shared_intermediate("dedup_minhash.shingles", _doc_shingle_h32(docs))
-    # Signature mins and band keys build as SQL expression strings (one
-    # Py4J call each) instead of ~_H stacked Column objects — identical
-    # semantics, measurably cheaper plan construction per bench rep
-    # (the kmeans assign() precedent; r14).
-    sig = sh.groupBy("doc_id").agg(
-        *[
-            F.expr(f"min(({_A[i]} * h + {_B[i]}) % {_P})").alias(f"m{i}")
-            for i in range(_H)
-        ]
+    sh = shared_intermediate(
+        "dedup_minhash.shingles", _doc_shingle_hashes(docs, _h32)
     )
-    band_keys = F.expr(
-        "array({})".format(
-            ", ".join(
-                "md5(concat_ws(',', {}))".format(
-                    ", ".join(
-                        f"CAST(m{b * _ROWS + r} AS STRING)"
-                        for r in range(_ROWS)
-                    )
-                )
-                for b in range(_BANDS)
-            )
-        )
-    )
-    band = sig.select(
-        "doc_id", F.posexplode(band_keys).alias("band_id", "band_key")
-    )
+    band = _band_rows(_minhash_signature(sh))
     cand = (
         band.alias("a")
         .join(band.alias("b"), ["band_id", "band_key"])
@@ -1119,12 +1133,12 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan details:
       * ONE shingle materialization (60-bit hashed rows) serves both
-        layers: MinHash signatures derive their required 32-bit base as
-        ``h div 2^28`` (both are prefixes of the same md5, and MIN-aggs
-        are multiset-invariant, so deriving h32 from the h60-distinct
-        rows yields bit-identical signatures to hashing at 32 bits
-        directly) while verification joins the collision-safe 60-bit
-        rows themselves.
+        layers: the MinHash kernel gets its required 32-bit base from
+        the ``h div 268435456`` (``h div 2^28``) select (both are
+        prefixes of the same md5, and MIN-aggs are multiset-invariant,
+        so deriving h32 from the h60-distinct rows yields bit-identical
+        signatures to hashing at 32 bits directly) while verification
+        joins the collision-safe 60-bit rows themselves.
       * Exact layer: corpus hash-agg (content_hash → min doc_id), batch
         LEFT-joins it — at scale this is the only full-corpus pass, and
         it is a single map-side-combined agg.
@@ -1136,7 +1150,10 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         ``new`` docs, and ``jaccard`` is NULL for ``exact`` (no shingle
         verification ran) — mirrored in the oracle's CASE."""
     docs = parallel_table(spark, sf_dir, "documents")
-    sh = shared_intermediate("dedup_incremental.sh", _doc_shingle_h60(docs))
+    # 60-bit keys for exact verification; MinHash takes the 32-bit prefix
+    sh = shared_intermediate(
+        "dedup_incremental.sh", _doc_shingle_hashes(docs, _h60)
+    )
     in_batch = (F.col("doc_id") % 10) >= _INC_SPLIT
 
     hashes = docs.select("doc_id", F.sha2("text", 256).alias("ch"))
@@ -1147,35 +1164,10 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     batch = hashes.filter(in_batch)
 
-    h32 = F.expr("h div 268435456")
-    sig = (
-        sh.select("doc_id", h32.alias("h32"))
-        .groupBy("doc_id")
-        .agg(
-            *[
-                F.min(
-                    (F.lit(_A[i]) * F.col("h32") + F.lit(_B[i])) % F.lit(_P)
-                ).alias(f"m{i}")
-                for i in range(_H)
-            ]
+    band = _band_rows(
+        _minhash_signature(
+            sh.select("doc_id", F.expr("h div 268435456").alias("h"))
         )
-    )
-    band_keys = F.array(
-        *[
-            F.md5(
-                F.concat_ws(
-                    ",",
-                    *[
-                        F.col(f"m{b * _ROWS + r}").cast("string")
-                        for r in range(_ROWS)
-                    ],
-                )
-            )
-            for b in range(_BANDS)
-        ]
-    )
-    band = sig.select(
-        "doc_id", F.posexplode(band_keys).alias("band_id", "band_key")
     )
     cand = (
         band.filter(in_batch)
@@ -1874,12 +1866,14 @@ def dedup_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan/scale: ONE shingle materialization feeds the truth index,
     the set sizes, AND the MinHash signatures (the `dedup_minhash`
-    budget); signatures are 32 parallel min-aggs (no row blowup);
-    the band self-join carries (doc_id, 16-byte key) rows with the
-    probe filter pushed to one side. Recall/candidate rollups run
-    over pair cardinality."""
+    budget); signatures and band rows come from the shared
+    ``_minhash_signature``/``_band_rows`` kernel, and the band
+    self-join has the probe filter pushed to one side.
+    Recall/candidate rollups run over pair cardinality."""
     docs = parallel_table(spark, sf_dir, "documents")
-    sh = shared_intermediate("dedup_recall.sh32", _doc_shingle_h32(docs))
+    sh = shared_intermediate(
+        "dedup_recall.sh32", _doc_shingle_hashes(docs, _h32)
+    )
     is_probe = F.col("doc_id") % _RE_MOD == 3
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     inter = (
@@ -1896,31 +1890,7 @@ def dedup_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(3 * F.col("i") >= F.col("sa") + F.col("sb"))
         .select("p", "d")
     )
-    sig = sh.groupBy("doc_id").agg(
-        *[
-            F.min((F.lit(_A[i]) * F.col("h") + F.lit(_B[i])) % F.lit(_P)).alias(
-                f"m{i}"
-            )
-            for i in range(_H)
-        ]
-    )
-    band_keys = F.array(
-        *[
-            F.md5(
-                F.concat_ws(
-                    ",",
-                    *[
-                        F.col(f"m{b * _ROWS + r}").cast("string")
-                        for r in range(_ROWS)
-                    ],
-                )
-            )
-            for b in range(_BANDS)
-        ]
-    )
-    band = sig.select(
-        "doc_id", F.posexplode(band_keys).alias("band_id", "band_key")
-    )
+    band = _band_rows(_minhash_signature(sh))
     cand = (
         band.filter(is_probe)
         .select(F.col("doc_id").alias("p"), "band_id", "band_key")
@@ -2183,21 +2153,16 @@ def dedup_band_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
     `dedup_threshold_sweep`.
 
     Plan/scale: ONE shared signature derivation (the registered
-    `dedup_minhash` shingle intermediate + identical _A/_B/_P
-    permutations), then per config a band-key equi self-join and a
+    `dedup_minhash` shingle intermediate through the same
+    ``_minhash_signature`` kernel), then per config ``_band_rows(sig,
+    b, r)``, a band-key equi self-join and a
     doc-keyed verify join — all candidate-volume-bounded, no
     all-pairs anywhere."""
     docs = parallel_table(spark, sf_dir, "documents")
-    sh = shared_intermediate("dedup_minhash.shingles", _doc_shingle_h32(docs))
-    sig = sh.groupBy("doc_id").agg(
-        *[
-            F.min(
-                (F.lit(_A[i]) * F.col("h") + F.lit(_B[i])) % F.lit(_P)
-            ).alias(f"m{i}")
-            for i in range(_H)
-        ]
+    sh = shared_intermediate(
+        "dedup_minhash.shingles", _doc_shingle_hashes(docs, _h32)
     )
-    sig = shared_intermediate("band_tuning.sigs", sig)
+    sig = shared_intermediate("band_tuning.sigs", _minhash_signature(sh))
     # r14: freeze hsets once — the verify stage joins it on BOTH sides
     # of every config, and without the freeze the plan rebuilt the
     # shingle-volume collect_set agg 8x (2 sides x 4 configs), each
@@ -2210,29 +2175,7 @@ def dedup_band_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     per_config = []
     for b, r in _BT_CONFIGS:
-        # One F.expr string instead of ~b*r stacked Column objects —
-        # identical semantics, but plan construction is a single Py4J
-        # call (the kmeans assign() precedent; r14, guide §1.2 "per-
-        # task work" applied to the driver: the 4-config loop built
-        # hundreds of Column handles per run).
-        keys = F.expr(
-            "array({})".format(
-                ", ".join(
-                    "named_struct('band_id', {band}, 'band_key',"
-                    " md5(concat_ws(',', {cols})))".format(
-                        band=band,
-                        cols=", ".join(
-                            f"CAST(m{band * r + i} AS STRING)"
-                            for i in range(r)
-                        ),
-                    )
-                    for band in range(b)
-                )
-            )
-        )
-        bands = sig.select(
-            "doc_id", F.explode(keys).alias("k")
-        ).select("doc_id", "k.band_id", "k.band_key")
+        bands = _band_rows(sig, b, r)
         cand = (
             bands.alias("a")
             .join(bands.alias("b"), ["band_id", "band_key"])
@@ -2481,39 +2424,19 @@ def dedup_minhash_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingle-set machinery every other jaccard op certifies against.
 
     Plan/scale: signatures and candidates are the shared
-    `dedup_minhash` derivations (one signature pass, band-bounded
-    candidates); the agreement join is (pairs x {h}) coordinate rows
-    — pair-volume-bounded, never corpus-shaped."""
+    `dedup_minhash` derivations (one ``_minhash_signature`` pass,
+    ``_band_rows``-bounded candidates); the agreement join is
+    (pairs x {h}) coordinate rows — pair-volume-bounded, never
+    corpus-shaped."""
     docs = parallel_table(spark, sf_dir, "documents")
-    sh = shared_intermediate("dedup_minhash.shingles", _doc_shingle_h32(docs))
-    sig_long = sh.groupBy("doc_id").agg(
-        *[
-            F.min(
-                (F.lit(_A[i]) * F.col("h") + F.lit(_B[i])) % F.lit(_P)
-            ).alias(f"m{i}")
-            for i in range(_H)
-        ]
+    sh = shared_intermediate(
+        "dedup_minhash.shingles", _doc_shingle_hashes(docs, _h32)
     )
+    sig_long = _minhash_signature(sh)
     sig_arr = sig_long.select(
         "doc_id", F.array(*[F.col(f"m{i}") for i in range(_H)]).alias("ms")
     )
-    band_keys = F.array(
-        *[
-            F.md5(
-                F.concat_ws(
-                    ",",
-                    *[
-                        F.element_at("ms", b * _ROWS + r + 1).cast("string")
-                        for r in range(_ROWS)
-                    ],
-                )
-            ).alias(f"b{b}")
-            for b in range(_BANDS)
-        ]
-    )
-    bands = sig_arr.select(
-        "doc_id", F.posexplode(band_keys).alias("band_id", "band_key")
-    )
+    bands = _band_rows(sig_long)
     cand = (
         bands.alias("a")
         .join(bands.alias("b"), ["band_id", "band_key"])

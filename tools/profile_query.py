@@ -2,7 +2,8 @@
 
 For each named query, separates where the wall-clock goes:
 
-  * build   — Python-side DataFrame construction (py4j + analysis)
+  * build   — Python-side DataFrame construction (py4j + analysis),
+              with the number of py4j commands it sent
   * segs    — each eager ``shared_intermediate``/``shared_partitioned``
               materialization job inside the build, by tag
   * exec    — the final noop-sink execution (full computation)
@@ -26,6 +27,7 @@ from nchu_bigdata_spark.registry import load_all_queries
 from nchu_bigdata_spark.session import get_session
 
 SEG_TIMES: list[tuple[str, float]] = []
+PY4J = [0]  # py4j commands sent since the last reset
 
 _orig_si = materialize.shared_intermediate
 _orig_sp = materialize.shared_partitioned
@@ -43,6 +45,22 @@ def _timed_sp(tag, df):
     out = _orig_sp(tag, df)
     SEG_TIMES.append((tag + " [persist]", time.perf_counter() - t0))
     return out
+
+
+def _count_py4j(spark) -> None:
+    """Count py4j commands at the gateway client, skipping py4j's own
+    garbage-collection messages (command ``m``): they are sent whenever
+    Python frees a JVM handle, so they do not repeat exactly. Same rule
+    as ``perfbench/tracing.py``."""
+    client = spark.sparkContext._gateway._gateway_client
+    orig_send = client.send_command
+
+    def send_command(command, *args, **kwargs):
+        if not command.startswith("m"):
+            PY4J[0] += 1
+        return orig_send(command, *args, **kwargs)
+
+    client.send_command = send_command
 
 
 def main() -> None:
@@ -68,6 +86,7 @@ def main() -> None:
     materialize.shared_partitioned = _timed_sp
 
     spark = get_session("profile")
+    _count_py4j(spark)
     specs = load_all_queries()
     # operators import the helpers by name; patch those references AFTER
     # load_all_queries so late imports get patched refs too (this loop
@@ -96,9 +115,11 @@ def main() -> None:
             SEG_TIMES.clear()
             spark.sparkContext.setJobDescription(f"rank-build:{name}")
             t0 = time.perf_counter()
+            PY4J[0] = 0
             try:
                 specs[name].fn(spark, args.sf)
                 wall = time.perf_counter() - t0
+                calls = PY4J[0]
             except Exception as e:  # streaming-only ops etc.
                 print(f"?? {name}: build failed: {e}")
                 continue
@@ -107,13 +128,13 @@ def main() -> None:
                 # left live by earlier queries would skew later builds
                 materialize.release_all()
             seg = sum(s for _, s in SEG_TIMES)
-            ranked.append((wall - seg, seg, name))
+            ranked.append((wall - seg, seg, calls, name))
         ranked.sort(reverse=True)
-        print("| query | pure build s | freeze segs s |")
-        print("|---|---|---|")
-        for pure, seg, name in ranked[: args.rank_build]:
-            print(f"| {name} | {pure:.3f} | {seg:.3f} |")
-        total = sum(p for p, _, _ in ranked)
+        print("| query | pure build s | freeze segs s | py4j calls |")
+        print("|---|---|---|---|")
+        for pure, seg, calls, name in ranked[: args.rank_build]:
+            print(f"| {name} | {pure:.3f} | {seg:.3f} | {calls} |")
+        total = sum(r[0] for r in ranked)
         print(f"(swept {len(ranked)} queries, total pure build {total:.1f}s)")
         return
 
@@ -125,18 +146,22 @@ def main() -> None:
         for _ in range(args.reps):
             SEG_TIMES.clear()
             spark.sparkContext.setJobDescription(f"profile:{name}")
+            PY4J[0] = 0
             t0 = time.perf_counter()
             df = specs[name].fn(spark, args.sf)
             t1 = time.perf_counter()
+            calls = PY4J[0]
             df.write.mode("overwrite").format("noop").save()
             t2 = time.perf_counter()
-            rows.append((t1 - t0, t2 - t1, list(SEG_TIMES)))
+            rows.append((t1 - t0, t2 - t1, list(SEG_TIMES), calls))
+        per_rep = [r[3] for r in rows]
         rows.sort(key=lambda r: r[0] + r[1])
-        build, execu, segs = rows[0]
+        build, execu, segs, _ = rows[0]
         seg_total = sum(s for _, s in segs)
         print(
             f"{name}: total={build + execu:.3f}s  build={build:.3f}s "
-            f"(segments {seg_total:.3f}s)  exec={execu:.3f}s"
+            f"(segments {seg_total:.3f}s)  exec={execu:.3f}s  "
+            f"build py4j calls per rep={per_rep}"
         )
         for tag, s in segs:
             print(f"    seg {tag}: {s:.3f}s")
