@@ -543,6 +543,7 @@ def main() -> None:
                 t0 = time.perf_counter()
                 df = specs[name].fn(spark, sf_dir)
                 df.write.mode("overwrite").format("noop").save()
+                del df  # release its freezes before the next build
                 samples.append(time.perf_counter() - t0)
             times[name] = round(min(samples), 3)
             means[name] = round(trimmed_mean(samples), 3)

@@ -23,12 +23,14 @@ still wins; decision stands.
 So: eager ``localCheckpoint``, with the leak the advisor flagged fixed —
 round 1 never released checkpoint blocks, so repeated invocations
 (bench reps, plan-audit sweeps, oracle runs) accumulated executor
-storage for the session lifetime. ``shared_intermediate`` keeps **one
-live generation per tag**: it diffs the JVM persistent-RDD map around
-the checkpoint to learn which RDD ids the new generation owns, and
-unpersists the previous generation's ids on the next call (or via
-``release_all`` in teardown). Storage is bounded at one copy per query
-no matter how many times the query is rebuilt.
+storage for the session lifetime. Every freeze belongs to the **run**
+that built it (:class:`Run`, in a context variable): one per registered
+query invocation, joined by nested operator calls, released when the
+result frame is collected (or at once if the build raises). A run keeps
+one live generation per tag: a rebuild unpersists the previous one.
+Storage is bounded by the live result frames. Freezes made outside any
+run go to a default run under the same rule; ``release_all`` releases
+every run.
 
 The build-time job eager checkpointing runs is deliberate: one pass to
 materialize beats 2-4 concurrent consumer recomputes, and a production
@@ -38,10 +40,84 @@ the storage has an owner with a release path.
 
 from __future__ import annotations
 
+import time
+import weakref
+from collections.abc import Callable, Iterator
+from contextlib import contextmanager
+from contextvars import ContextVar
+
 from pyspark.sql import DataFrame
 
-# tag -> persistent RDD ids owned by the live generation
-_LIVE: dict[str, list[int]] = {}
+
+class Run:
+    """The freezes one query run owns: ``live`` maps each tag to the
+    release of its live generation, ``segments`` holds ``(tag,
+    seconds)`` per freeze, ``counters`` what operators report."""
+
+    def __init__(self) -> None:
+        self.live: dict[str, Callable[[], None]] = {}
+        self.segments: list[tuple[str, float]] = []
+        self.counters: dict[str, int] = {}
+        _RUNS.add(self)
+
+    def free(self, tag: str) -> None:
+        try:
+            self.live.pop(tag, lambda: None)()
+        except Exception:  # pragma: no cover - session already stopped
+            pass
+
+    def own(self, tag: str, release: Callable[[], None], t0: float) -> None:
+        """Replace ``tag``'s live generation; record seconds since ``t0``."""
+        self.free(tag)
+        self.live[tag] = release
+        self.segments.append((tag, time.perf_counter() - t0))
+
+    def release(self) -> None:
+        for tag in list(self.live):
+            self.free(tag)
+
+
+_RUNS: weakref.WeakSet[Run] = weakref.WeakSet()
+_DEFAULT_RUN = Run()
+_ACTIVE: ContextVar[Run] = ContextVar("freeze_run", default=_DEFAULT_RUN)
+
+
+def current_run() -> Run:
+    """The run being built, else the default run."""
+    return _ACTIVE.get()
+
+
+@contextmanager
+def run_scope() -> Iterator[Run]:
+    """Open a run for the block (registered queries built inside join
+    it); its freezes are released when the block exits."""
+    run = Run()
+    token = _ACTIVE.set(run)
+    try:
+        yield run
+    finally:
+        _ACTIVE.reset(token)
+        run.release()
+
+
+def build_in_run(build: Callable[[], DataFrame]) -> DataFrame:
+    """Call ``build`` in a new run that lives as long as the frame it
+    returns (hold that frame while anything derived from it runs), or
+    in the active run if there is one."""
+    if _ACTIVE.get() is not _DEFAULT_RUN:
+        return build()
+    run = Run()
+    token = _ACTIVE.set(run)
+    try:
+        df = build()
+    except BaseException:
+        run.release()
+        raise
+    finally:
+        _ACTIVE.reset(token)
+    weakref.finalize(df, run.release).atexit = False
+    return df
+
 
 # Plan-audit hook (tools/explain_audit.py, VERDICT r9 item 5): a
 # checkpointed segment's physical plan is INVISIBLE in the consumer
@@ -54,18 +130,6 @@ _LIVE: dict[str, list[int]] = {}
 # Off by default: production/bench builds pay zero extra planning.
 CAPTURE_SEGMENT_PLANS = False
 SEGMENT_PLANS: dict[str, str] = {}
-
-
-def _persistent_ids(sc) -> set[int]:
-    return {int(i) for i in sc._jsc.getPersistentRDDs().keySet()}
-
-
-def _release(sc, rdd_ids: list[int]) -> None:
-    jmap = sc._jsc.getPersistentRDDs()
-    for rid in rdd_ids:
-        rdd = jmap.get(rid)
-        if rdd is not None:
-            rdd.unpersist(False)
 
 
 def _capture_plan(tag: str, df: DataFrame) -> None:
@@ -83,25 +147,16 @@ def _capture_plan(tag: str, df: DataFrame) -> None:
 
 
 def shared_intermediate(tag: str, df: DataFrame, eager: bool = True) -> DataFrame:
-    """Eagerly ``localCheckpoint`` ``df`` as the single live generation
-    for ``tag``, releasing the previous generation's blocks."""
-    sc = df.sparkSession.sparkContext
+    """Eagerly ``localCheckpoint`` ``df`` as the active run's single
+    live generation for ``tag``, releasing the previous generation's
+    blocks."""
+    t0 = time.perf_counter()
     _capture_plan(tag, df)
-    before = _persistent_ids(sc)
     out = df.localCheckpoint(eager=eager)
-    new_ids = sorted(_persistent_ids(sc) - before)
-    prev = _LIVE.pop(tag, None)
-    if prev:
-        try:
-            _release(sc, prev)
-        except Exception:  # pragma: no cover - session already stopped
-            pass
-    _LIVE[tag] = new_ids
+    # the blocks belong to the checkpointed RDD under out's LogicalRDD
+    rdd = out._jdf.logicalPlan().rdd()
+    _ACTIVE.get().own(tag, lambda: rdd.unpersist(False), t0)
     return out
-
-
-# tag -> live persisted DataFrame (shared_partitioned generations)
-_LIVE_DF: dict[str, DataFrame] = {}
 
 
 def shared_partitioned(tag: str, df: DataFrame) -> DataFrame:
@@ -119,24 +174,25 @@ def shared_partitioned(tag: str, df: DataFrame) -> DataFrame:
     string-heavy millions-of-rows segments) still hold; use THIS only
     when a preserved partitioning pays for the cache build.
 
-    Same bounded-storage contract: one live generation per tag. The
-    previous generation is unpersisted BEFORE the new persist — the
-    cache manager keys entries by analyzed plan, so for the common
-    rebuild-the-same-plan case an unpersist after the new persist
-    would evict the block the new generation just registered."""
+    Same bounded-storage contract: one live generation per tag per
+    run. The previous generation is unpersisted BEFORE the new persist
+    — the cache manager keys entries by analyzed plan, so for the
+    common rebuild-the-same-plan case an unpersist after the new
+    persist would evict the block the new generation just registered.
+    Two runs persisting one plan share its entry, and the older run's
+    release evicts it: the newer frame recomputes the segment at exec
+    (correct, mistimed), so rep loops drop each frame before rebuilding."""
+    t0 = time.perf_counter()
     _capture_plan(tag, df)
-    prev = _LIVE_DF.pop(tag, None)
-    if prev is not None:
-        try:
-            prev.unpersist(False)
-        except Exception:  # pragma: no cover - session already stopped
-            pass
+    run = _ACTIVE.get()
+    run.free(tag)
     out = df.persist()
     # eager: one materialization pass beats N concurrent consumer
     # recomputes racing the cache (same rationale as the eager
     # localCheckpoint above)
     out.count()
-    _LIVE_DF[tag] = out
+    jdf = out._jdf  # not ``out``: the release must not keep the frame alive
+    run.own(tag, lambda: jdf.unpersist(False), t0)
     return out
 
 
@@ -174,21 +230,6 @@ def range_pid_frozen(tag: str, df: DataFrame, *sort_cols) -> DataFrame:
 
 
 def release_all() -> None:
-    """Unpersist every live intermediate (test teardown hook)."""
-    from pyspark.sql import SparkSession
-
-    spark = SparkSession.getActiveSession()
-    if spark is None:
-        _LIVE.clear()
-        _LIVE_DF.clear()
-        return
-    for tag in list(_LIVE):
-        try:
-            _release(spark.sparkContext, _LIVE.pop(tag))
-        except Exception:  # pragma: no cover
-            pass
-    for tag in list(_LIVE_DF):
-        try:
-            _LIVE_DF.pop(tag).unpersist(False)
-        except Exception:  # pragma: no cover
-            pass
+    """Release the default run and every live run (test teardown hook)."""
+    for run in list(_RUNS):
+        run.release()

@@ -45,7 +45,7 @@ from pyspark.sql import functions as F
 
 from nchu_bigdata_spark.compat import dround, sql_dround
 from nchu_bigdata_spark.io import parallel_table, table
-from nchu_bigdata_spark.materialize import shared_intermediate
+from nchu_bigdata_spark.materialize import current_run, shared_intermediate
 from nchu_bigdata_spark.registry import register
 
 _K = 3  # tokens per shingle
@@ -482,9 +482,7 @@ def dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = parallel_table(spark, sf_dir, "documents")
     # The exploded shingle-hash rows feed four consumers (signatures,
     # set sizes, both verification sides); materialize them once instead
-    # of re-running split/transform/md5 per consumer. One live generation
-    # per tag (materialize.py): no storage accumulation across repeated
-    # invocations.
+    # of re-running split/transform/md5 per consumer.
     sh = shared_intermediate(
         "dedup_minhash.shingles", _doc_shingle_hashes(docs, _h32)
     )
@@ -845,8 +843,6 @@ def connected_components(
     """
     if algorithm not in ("auto", "label", "star"):
         raise ValueError(f"unknown algorithm {algorithm!r}")
-    global LAST_STAR_ROUNDS
-    LAST_STAR_ROUNDS = None  # set by _star_labels iff the star path runs
     sym = pairs.union(
         pairs.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
     ).withColumnRenamed("doc_a", "src").withColumnRenamed("doc_b", "dst")
@@ -912,15 +908,6 @@ def connected_components(
 # into a loud error instead of an infinite loop.
 _STAR_MAX_ITERS = 40
 
-# Rounds the most recent _star_labels call used — observability hook so
-# the O(log n) convergence claim is testable (tests pin path/hub graphs
-# and assert the bound) instead of folklore. Reset to None on entry to
-# every connected_components call, so a reader can never observe a
-# PREVIOUS run's count after a label-propagation run (which doesn't
-# use star rounds at all) — stale-read hazard flagged in the round-6
-# self-review.
-LAST_STAR_ROUNDS: int | None = None
-
 
 def _star_labels(sym: DataFrame) -> DataFrame:
     """Alternating large-star/small-star connected components (Kiveris
@@ -980,10 +967,10 @@ def _star_labels(sym: DataFrame) -> DataFrame:
             .union(smin.select("u", F.col("m").alias("v")))
             .distinct(),
         )
+        # the run records the round count: the O(log n) claim is tested
+        current_run().counters["star_rounds"] = it + 1
         # Fixpoint: identical edge sets (both sides are distinct sets,
         # so equal counts + empty difference ⇔ equality).
-        global LAST_STAR_ROUNDS
-        LAST_STAR_ROUNDS = it + 1
         if new.count() == cur.count() and new.exceptAll(cur).count() == 0:
             cur = new
             break

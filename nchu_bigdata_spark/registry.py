@@ -55,6 +55,7 @@ def register(
         # engines so the driver's pandas canonicalizer sees identical
         # dtypes. No-op for queries without decimal outputs.
         from nchu_bigdata_spark.compat import finalize_oracle, finalize_output
+        from nchu_bigdata_spark.materialize import build_in_run
 
         def final_fn(spark: SparkSession, sf_dir: str, _fn: QueryFn = fn) -> DataFrame:
             # Queries run under caller-owned sessions (the driver's);
@@ -81,7 +82,8 @@ def register(
 
             for k, v in PLAN_CONF_PINS.items():
                 spark.conf.set(k, v)
-            return finalize_output(_fn(spark, sf_dir))
+            # the query's freezes live as long as the frame it returns
+            return build_in_run(lambda: finalize_output(_fn(spark, sf_dir)))
 
         final_fn.__name__ = fn.__name__
         final_fn.__doc__ = fn.__doc__

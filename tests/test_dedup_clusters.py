@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import pytest
 
+from nchu_bigdata_spark.materialize import run_scope
 from nchu_bigdata_spark.operators.dedup import connected_components
 
 
@@ -135,14 +136,14 @@ def test_star_path_graph_logn_rounds(spark):
     and the labels against the known single component."""
     import math
 
-    from nchu_bigdata_spark.operators import dedup
-
     n = 64
-    got = _cc(spark, [(i, i + 1) for i in range(n - 1)], algorithm="star")
+    with run_scope() as run:
+        got = _cc(spark, [(i, i + 1) for i in range(n - 1)], algorithm="star")
     assert set(got) == set(range(n))
     assert all(v == (0, n, int(k == 0)) for k, v in got.items())
     bound = 2 * math.ceil(math.log2(n)) + 2
-    assert 1 <= dedup.LAST_STAR_ROUNDS <= bound, dedup.LAST_STAR_ROUNDS
+    rounds = run.counters["star_rounds"]
+    assert 1 <= rounds <= bound, rounds
 
 
 def test_star_hub_graph_rounds_constant(spark):
@@ -153,17 +154,15 @@ def test_star_hub_graph_rounds_constant(spark):
     and never blow up the edge set."""
     from pyspark.sql import functions as F
 
-    from nchu_bigdata_spark.operators import dedup
-    from nchu_bigdata_spark.operators.dedup import connected_components
-
     n_leaves = 100_000
     edges = (
         spark.range(1, n_leaves + 1)
         .select(F.lit(0).cast("long").alias("doc_a"), F.col("id").alias("doc_b"))
     )
-    out = connected_components(edges, algorithm="star")
-    agg = out.groupBy("cluster_id").count().collect()
-    assert len(agg) == 1 and agg[0]["cluster_id"] == 0
-    assert agg[0]["count"] == n_leaves + 1
-    assert out.filter("is_canonical = 1").count() == 1
-    assert dedup.LAST_STAR_ROUNDS <= 3, dedup.LAST_STAR_ROUNDS
+    with run_scope() as run:
+        out = connected_components(edges, algorithm="star")
+        agg = out.groupBy("cluster_id").count().collect()
+        assert len(agg) == 1 and agg[0]["cluster_id"] == 0
+        assert agg[0]["count"] == n_leaves + 1
+        assert out.filter("is_canonical = 1").count() == 1
+    assert run.counters["star_rounds"] <= 3, run.counters

@@ -4,6 +4,7 @@ item 8)."""
 
 import re
 
+import pytest
 from pyspark.sql import functions as F
 
 from nchu_bigdata_spark.registry import load_all_queries
@@ -30,8 +31,13 @@ def test_shared_partitioned_bounded_and_partitioning_preserved(spark):
     segment's hashpartitioning survives into consumer joins: a
     SHUFFLE_HASH join against the pre-partitioned cached side
     exchanges ONLY the probe side."""
-    from nchu_bigdata_spark.materialize import _LIVE_DF, shared_partitioned
+    import gc
 
+    from nchu_bigdata_spark.materialize import shared_partitioned
+
+    jsc = spark.sparkContext._jsc
+    gc.collect()  # frames of earlier tests release their runs now
+    n0 = jsc.getPersistentRDDs().size()
     base = spark.range(0, 10_000).select(
         (F.col("id") % 100).alias("k"), F.col("id").alias("payload")
     )
@@ -47,7 +53,8 @@ def test_shared_partitioned_bounded_and_partitioning_preserved(spark):
     )
     assert gen3.storageLevel.useMemory
     assert not gen2.storageLevel.useMemory  # previous generation freed
-    assert list(_LIVE_DF) .count("t14_seg") == 1
+    # exactly one live generation holds storage for the tag
+    assert jsc.getPersistentRDDs().size() == n0 + 1
 
     probe = spark.range(0, 1_000).select((F.col("id") % 100).alias("k"))
     joined = probe.hint("shuffle_hash").join(gen3, "k")
@@ -65,11 +72,12 @@ def test_shared_partitioned_bounded_and_partitioning_preserved(spark):
     assert (
         len(re.findall(r"Exchange hashpartitioning\(k", exec_region)) == 1
     ), plan
-    shared_partitioned("t14_seg", base.limit(1))  # cheap final gen
+    final = shared_partitioned("t14_seg", base.limit(1))  # cheap final gen
     from nchu_bigdata_spark.materialize import release_all
 
-    release_all()
-    assert "t14_seg" not in _LIVE_DF
+    release_all()  # also releases what earlier tests left live
+    assert not final.storageLevel.useMemory
+    assert jsc.getPersistentRDDs().size() <= n0
 
 
 # --------------------------------------------------------------------------
@@ -94,20 +102,23 @@ def test_random_walk_shj_plan(spark, sf_dir):
     assert "InMemoryTableScan" in plan, plan
 
 
-def test_random_walk_cache_does_not_leak(spark, sf_dir):
-    """Repeated walk builds keep ONE live edges generation — the r14
-    persist switch must not reintroduce the round-1 storage leak
-    (VERDICT r1: unreleased blocks accumulated over bench reps)."""
+@pytest.mark.parametrize("name", ["graph_random_walk", "dedup_minhash"])
+def test_random_walk_cache_does_not_leak(spark, sf_dir, name):
+    """Repeated builds leave NO live generation behind once each rep's
+    frame is dropped — neither the persisted walk edges
+    (shared_partitioned) nor the checkpointed MinHash shingles
+    (shared_intermediate): the round-1 storage leak (VERDICT r1:
+    unreleased blocks accumulated over bench reps) must not return."""
+    import gc
+
     jsc = spark.sparkContext._jsc
-    SPECS["graph_random_walk"].fn(spark, sf_dir).write.format(
-        "noop"
-    ).mode("overwrite").save()
-    n1 = jsc.getPersistentRDDs().size()
-    for _ in range(2):
-        SPECS["graph_random_walk"].fn(spark, sf_dir).write.format(
-            "noop"
-        ).mode("overwrite").save()
-    assert jsc.getPersistentRDDs().size() == n1
+    gc.collect()  # frames of earlier tests release their runs now
+    n0 = jsc.getPersistentRDDs().size()
+    for _ in range(3):
+        df = SPECS[name].fn(spark, sf_dir)
+        df.write.format("noop").mode("overwrite").save()
+        del df
+        assert jsc.getPersistentRDDs().size() == n0
 
 
 # --------------------------------------------------------------------------

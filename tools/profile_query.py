@@ -5,7 +5,8 @@ For each named query, separates where the wall-clock goes:
   * build   — Python-side DataFrame construction (py4j + analysis),
               with the number of py4j commands it sent
   * segs    — each eager ``shared_intermediate``/``shared_partitioned``
-              materialization job inside the build, by tag
+              materialization job inside the build, by tag, as recorded
+              by the run (``materialize.run_scope``) the build joins
   * exec    — the final noop-sink execution (full computation)
 
 Methodology matches bench.py (warm session, noop sink, N reps, min).
@@ -26,25 +27,7 @@ from nchu_bigdata_spark import materialize
 from nchu_bigdata_spark.registry import load_all_queries
 from nchu_bigdata_spark.session import get_session
 
-SEG_TIMES: list[tuple[str, float]] = []
 PY4J = [0]  # py4j commands sent since the last reset
-
-_orig_si = materialize.shared_intermediate
-_orig_sp = materialize.shared_partitioned
-
-
-def _timed_si(tag, df, eager=True):
-    t0 = time.perf_counter()
-    out = _orig_si(tag, df, eager)
-    SEG_TIMES.append((tag, time.perf_counter() - t0))
-    return out
-
-
-def _timed_sp(tag, df):
-    t0 = time.perf_counter()
-    out = _orig_sp(tag, df)
-    SEG_TIMES.append((tag + " [persist]", time.perf_counter() - t0))
-    return out
 
 
 def _count_py4j(spark) -> None:
@@ -82,27 +65,9 @@ def main() -> None:
     if not args.rank_build and not args.queries:
         ap.error("name queries to profile, or pass --rank-build N")
 
-    materialize.shared_intermediate = _timed_si
-    materialize.shared_partitioned = _timed_sp
-
     spark = get_session("profile")
     _count_py4j(spark)
     specs = load_all_queries()
-    # operators import the helpers by name; patch those references AFTER
-    # load_all_queries so late imports get patched refs too (this loop
-    # subsumes a pre-load pass — ADVICE r14)
-    for mod in list(sys.modules.values()):
-        if mod is None or not getattr(mod, "__name__", "").startswith(
-            "nchu_bigdata_spark"
-        ):
-            continue
-        for attr in ("shared_intermediate", "shared_partitioned"):
-            if getattr(mod, attr, None) in (_orig_si, _orig_sp):
-                setattr(
-                    mod,
-                    attr,
-                    _timed_si if attr == "shared_intermediate" else _timed_sp,
-                )
 
     # warm the runtime like bench.warm does (cheap subset)
     from pyspark.sql import functions as F
@@ -112,22 +77,20 @@ def main() -> None:
     if args.rank_build:
         ranked = []
         for name in sorted(specs):
-            SEG_TIMES.clear()
             spark.sparkContext.setJobDescription(f"rank-build:{name}")
             t0 = time.perf_counter()
             PY4J[0] = 0
+            # the run releases the build's freezes on exit, so every
+            # build starts from an empty block store
             try:
-                specs[name].fn(spark, args.sf)
-                wall = time.perf_counter() - t0
-                calls = PY4J[0]
+                with materialize.run_scope() as run:
+                    specs[name].fn(spark, args.sf)
+                    wall = time.perf_counter() - t0
+                    calls = PY4J[0]
             except Exception as e:  # streaming-only ops etc.
                 print(f"?? {name}: build failed: {e}")
                 continue
-            finally:
-                # every build starts from an empty block store: freezes
-                # left live by earlier queries would skew later builds
-                materialize.release_all()
-            seg = sum(s for _, s in SEG_TIMES)
+            seg = sum(s for _, s in run.segments)
             ranked.append((wall - seg, seg, calls, name))
         ranked.sort(reverse=True)
         print("| query | pure build s | freeze segs s | py4j calls |")
@@ -144,16 +107,16 @@ def main() -> None:
             continue
         rows = []
         for _ in range(args.reps):
-            SEG_TIMES.clear()
             spark.sparkContext.setJobDescription(f"profile:{name}")
             PY4J[0] = 0
-            t0 = time.perf_counter()
-            df = specs[name].fn(spark, args.sf)
-            t1 = time.perf_counter()
-            calls = PY4J[0]
-            df.write.mode("overwrite").format("noop").save()
-            t2 = time.perf_counter()
-            rows.append((t1 - t0, t2 - t1, list(SEG_TIMES), calls))
+            with materialize.run_scope() as run:
+                t0 = time.perf_counter()
+                df = specs[name].fn(spark, args.sf)
+                t1 = time.perf_counter()
+                calls = PY4J[0]
+                df.write.mode("overwrite").format("noop").save()
+                t2 = time.perf_counter()
+            rows.append((t1 - t0, t2 - t1, run.segments, calls))
         per_rep = [r[3] for r in rows]
         rows.sort(key=lambda r: r[0] + r[1])
         build, execu, segs, _ = rows[0]

@@ -369,6 +369,7 @@ def time_op(spark, specs, name: str, sf_dir: str, reps: int) -> tuple[float, int
         t0 = time.perf_counter()
         df = specs[name].fn(spark, sf_dir)
         df.write.mode("overwrite").format("noop").save()
+        del df  # release its freezes before the next build
         best = min(best, time.perf_counter() - t0)
     rows = specs[name].fn(spark, sf_dir).count()
     return best, rows
