@@ -21,6 +21,16 @@ Outputs, under ``<out>/``:
   center file in place* (``src/Kmeans.java:259-276``) — the CLI never
   mutates its inputs.
 
+Input: ``<data>`` is one text file, read by Spark's text source
+(``read_pm25``), so every pass over it — ``fit``'s cache fill, the
+final fold, the assignments write, the representative-day pick — runs
+in the JVM without Python workers. Each line gets a ``line_id`` that
+is an **order key only**: it increases in file order but has gaps
+between partitions. It orders the final fold and breaks
+representative-day ties, and neither needs dense ids. File order holds
+because Spark places one file's splits in offset order (see
+``read_pm25``); a directory of several files has no defined line order.
+
 Bit-reproducibility: the intermediate Lloyd iterations run on the
 distributed fit (``operators/kmeans.py`` — Summarizer partial aggregates,
 order-independent to ~1 ulp), but the FINAL iteration's centroid means
@@ -53,15 +63,23 @@ STATION = "大里"  # hardcoded by the reference, src/Kmeans.java:131
 
 
 def read_pm25(spark: SparkSession, path: str) -> DataFrame:
-    """Reference text rows → (line_id, line, obs_date, features).
+    """Reference text rows → (line_id, line, obs_date, features), read
+    by Spark's text source inside the JVM (no Python worker touches a
+    row on any pass over this frame).
 
-    ``zipWithIndex`` assigns file-order line ids deterministically
-    (partition order × within-partition order = file order for text
-    input), which the bit-parity fold below needs."""
-    rdd = spark.sparkContext.textFile(path).zipWithIndex()
-    df = spark.createDataFrame(rdd, "line string, line_id long").filter(
-        F.length(F.trim("line")) > 0
-    )
+    ``line_id`` is an order key, not a row number: it increases in file
+    order but is not dense (``monotonically_increasing_id`` = partition
+    index << 33 | row index within the partition). File order holds for
+    a single input file: Spark packs a file's splits longest-first with
+    a stable sort, and every split but the shorter last one has the same
+    length, so partition index follows byte offset; within a split the
+    line reader emits lines in order. A directory of several files
+    gives no such guarantee. Empty and space-only lines are dropped;
+    ``\n``, ``\r\n`` and ``\r`` endings all end a line."""
+    df = spark.read.text(path).select(
+        F.col("value").alias("line"),
+        F.monotonically_increasing_id().alias("line_id"),
+    ).filter(F.length(F.trim("line")) > 0)
     fields = F.split("line", ",")
     return df.select(
         "line_id",

@@ -25,6 +25,7 @@ from pyspark.sql import types as T
 
 from nchu_bigdata_spark.compat import dround, dsum
 from nchu_bigdata_spark.io import table
+from nchu_bigdata_spark.materialize import shared_intermediate
 from nchu_bigdata_spark.registry import register
 
 _SCRATCH = os.path.join(os.path.dirname(os.path.dirname(os.path.dirname(__file__))), ".scratch")
@@ -517,9 +518,10 @@ def scan_csv_corrupt(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-pins columnPruning=true before the next query — if a caller
     # executed this plan after that, one-token bad lines would parse as
     # null-lang "good" rows and silently diverge from the oracle.
-    # localCheckpoint(eager) runs the CSV parse NOW, under the
-    # override, and pins the tiny per-lang aggregate.
-    return result.localCheckpoint(eager=True)
+    # The eager checkpoint (shared_intermediate) runs the CSV parse
+    # NOW, under the override, and pins the tiny per-lang aggregate
+    # for this query run only.
+    return shared_intermediate("scan_csv_corrupt.result", result)
 
 
 # --------------------------------------------------------------------------
@@ -1264,7 +1266,7 @@ def sink_dynamic_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # materialize while the dynamic-mode conf is live (the override
     # must not depend on surviving until the caller collects)
-    back = back.localCheckpoint(eager=True)
+    back = shared_intermediate("sink_dynamic_overwrite.back", back)
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "static")
     return back
 

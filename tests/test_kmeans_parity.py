@@ -334,6 +334,100 @@ def test_cli_reproduces_reference_run(spark, tmp_path):
         assert m_head.endswith(",大里,") and g_head.endswith(",大里,")
 
 
+def _cli_outputs(out: str) -> tuple[list[str], list[str]]:
+    """(assignment lines, centers.txt lines) a CLI run wrote to ``out``."""
+    emitted: list[str] = []
+    adir = os.path.join(out, "assignments")
+    for fn in sorted(os.listdir(adir)):
+        if fn.startswith("part-"):
+            with open(os.path.join(adir, fn), encoding="utf-8") as f:
+                emitted += [l.rstrip("\n") for l in f if l.strip()]
+    with open(os.path.join(out, "centers.txt"), encoding="utf-8") as f:
+        centers = [l.rstrip("\n") for l in f if l.strip()]
+    return emitted, centers
+
+
+def _fixture_lines(name: str) -> list[str]:
+    with open(os.path.join(FIXTURES, name), encoding="utf-8") as f:
+        return [l.rstrip("\n") for l in f if l.strip()]
+
+
+def test_cli_multi_split_keeps_file_order(spark, tmp_path):
+    """With pm25.txt cut into ~4 KB splits, ``read_pm25`` reads several
+    partitions, its line ids still sort the lines into file order, and
+    the CLI's outputs still equal both goldens: the final fold and the
+    representative-day tie-break only need line ids as order keys."""
+    from nchu_bigdata_spark import kmeans as cli
+
+    confs = {
+        "spark.sql.files.maxPartitionBytes": "4096",
+        "spark.sql.files.openCostInBytes": "0",
+    }
+    saved = {k: spark.conf.get(k, None) for k in confs}
+    out = str(tmp_path / "kmeans_out")
+    data = os.path.join(FIXTURES, "pm25.txt")
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        df = cli.read_pm25(spark, data)
+        assert df.rdd.getNumPartitions() >= 2
+        lines = [r["line"] for r in df.orderBy("line_id").collect()]
+        os.makedirs(out)
+        cli.run(
+            spark, data,
+            os.path.join(FIXTURES, "pm25.cluster.center.conf.txt"), out, 5,
+        )
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+    assert lines == _fixture_lines("pm25.txt")
+
+    emitted, ours = _cli_outputs(out)
+    assert sorted(emitted) == sorted(_fixture_lines("golden_assignments.txt"))
+    golden = _fixture_lines("golden_centers.txt")
+    assert len(ours) == len(golden) == 4
+    for mine, gold in zip(ours, golden):
+        assert mine.split("PM25,", 1)[1] == gold.split("PM25,", 1)[1]
+    dates = [line[1:].split(",", 1)[0] for line in ours]
+    assert dates == ["2015/09/20", "2015/04/30", "2015/12/28", "2015/11/01"]
+
+
+def test_read_pm25_plan_stays_in_jvm(spark):
+    """The CLI's input is a text ``FileScan``, not a Python RDD: a
+    ``PythonRDD``/``ExistingRDD`` under the frame would send every pass
+    over it through Python workers."""
+    from nchu_bigdata_spark.kmeans import read_pm25
+
+    df = read_pm25(spark, os.path.join(FIXTURES, "pm25.txt"))
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "FileScan text" in plan, plan
+    assert "ExistingRDD" not in plan, plan
+    assert "PythonRDD" not in plan, plan
+
+
+def test_read_pm25_crlf_and_blank_lines(spark, tmp_path):
+    """CRLF line endings and a whitespace-only line in the middle give
+    the same (obs_date, features) rows, in the same line-id order, as
+    the LF fixture."""
+    from nchu_bigdata_spark.kmeans import read_pm25
+
+    lines = _fixture_lines("pm25.txt")
+    crlf = tmp_path / "pm25_crlf.txt"
+    with open(crlf, "w", encoding="utf-8", newline="") as f:
+        f.write("\r\n".join(lines[:180] + ["   "] + lines[180:]) + "\r\n")
+
+    def rows(path):
+        df = read_pm25(spark, path).orderBy("line_id")
+        return [(r["obs_date"], r["features"]) for r in df.collect()]
+
+    want = rows(os.path.join(FIXTURES, "pm25.txt"))
+    assert len(want) == 365
+    assert rows(str(crlf)) == want
+
+
 def test_toy_points_converge(spark):
     """Draft-variant shape (Kmeans/kmeans.java): 26 2-d points, k=2,
     normalized-squared metric, exact-convergence stop
