@@ -12,6 +12,8 @@ never ``inferSchema`` (an extra full pass over the data at scale).
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
@@ -200,6 +202,29 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             "event_id", "ts", "user_id", "event_type", "value", "props"
         )
     return spark.read.parquet(path)
+
+
+# A base-table reference: a testdata table name right after FROM/JOIN.
+# Anchoring matters: a bare word match would also rewrite column
+# aliases that share a table's name (tpch_q2's ``n_name AS nation``).
+_TABLE_REF = re.compile(r"\b((?i:FROM|JOIN)\s+)(" + "|".join(TABLES) + r")\b")
+
+
+def sql_over_tables(spark: SparkSession, sf_dir: str, text: str) -> DataFrame:
+    """Run Spark SQL ``text`` with each base-table reference bound to
+    ``table(spark, sf_dir, name)``.
+
+    The tables go in as ``spark.sql`` keyword arguments, which PySpark
+    binds as uuid-named temp views and drops once the query is
+    analyzed, so the caller's session catalog is left as it was (a
+    caller's own ``orders`` view is neither read nor replaced)."""
+    # with keyword arguments, spark.sql runs the text through str.format
+    text = text.replace("{", "{{").replace("}", "}}")
+    names = {m.group(2) for m in _TABLE_REF.finditer(text)}
+    return spark.sql(
+        _TABLE_REF.sub(r"\1{\2}", text),
+        **{n: table(spark, sf_dir, n) for n in names},
+    )
 
 
 def parallel_table(

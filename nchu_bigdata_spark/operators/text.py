@@ -29,10 +29,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from nchu_bigdata_spark.compat import davg, sql_davg
+from nchu_bigdata_spark.compat import sql_davg
 from nchu_bigdata_spark.io import parallel_table, table
 from nchu_bigdata_spark.materialize import range_pid_frozen
-from nchu_bigdata_spark.registry import register
+from nchu_bigdata_spark.registry import register, register_sql
 
 STOPWORDS = ("the", "a")
 
@@ -49,7 +49,7 @@ def tokens(docs: DataFrame) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-@register(
+register_sql(
     "text_stats",
     tags=("b10",),
     oracle=f"""
@@ -63,17 +63,6 @@ def tokens(docs: DataFrame) -> DataFrame:
         GROUP BY lang, source
     """,
 )
-def text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-(lang, source) document stats — the EDBT'16
-    sentiment-at-scale aggregation shape."""
-    docs = table(spark, sf_dir, "documents")
-    return docs.groupBy("lang", "source").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("n_chars").alias("total_chars"),
-        davg("n_chars").alias("avg_chars"),
-        F.min("n_chars").alias("min_chars"),
-        F.max("n_chars").alias("max_chars"),
-    )
 
 
 # --------------------------------------------------------------------------

@@ -23,7 +23,7 @@ from nchu_bigdata_spark.compat import (
 )
 from nchu_bigdata_spark.io import parallel_table, table
 from nchu_bigdata_spark.materialize import range_pid_frozen, shared_intermediate
-from nchu_bigdata_spark.registry import register
+from nchu_bigdata_spark.registry import register, register_sql
 
 
 @register(
@@ -177,7 +177,7 @@ def agg_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+register_sql(
     "agg_grouping_sets",
     tags=("b4",),
     oracle="""
@@ -192,15 +192,6 @@ def agg_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
         GROUP BY ROLLUP (o_orderstatus, o_orderpriority)
     """,
 )
-def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ROLLUP with GROUPING markers (subtotal + grand-total rows)."""
-    o = table(spark, sf_dir, "orders")
-    return o.rollup("o_orderstatus", "o_orderpriority").agg(
-        F.count(F.lit(1)).alias("n"),
-        dsum("o_totalprice").alias("total"),
-        F.grouping("o_orderstatus").cast("int").alias("g_status"),
-        F.grouping("o_orderpriority").cast("int").alias("g_prio"),
-    )
 
 
 @register(
@@ -1367,7 +1358,11 @@ def agg_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-@register(
+# Catalyst compiles CUBE to ONE Expand (2^k replicas per input row) + one
+# map-side-combining hash agg: one shuffle, not 2^k scans. The gid is
+# spelled out as GROUPING bits because DuckDB's GROUPING_ID argument
+# order is engine-defined.
+register_sql(
     "agg_cube",
     tags=("b4",),
     oracle="""
@@ -1386,36 +1381,6 @@ def agg_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
         GROUP BY CUBE (o_orderstatus, o_orderpriority)
     """,
 )
-def agg_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full CUBE — every one of the 2^k grouping combinations (cell,
-    both one-dimension marginals, grand total) in ONE pass, with
-    ``grouping_id`` marking which keys are aggregated away (the only
-    way to tell a subtotal row from a genuinely-NULL key). Completes
-    the OLAP lattice family next to ``agg_grouping_sets``'s ROLLUP:
-    rollup emits k+1 hierarchy slices, cube emits the full 2^k
-    cross-marginal set a BI tool's pivot-any-axis view needs.
-
-    Money is exact cents (the events_rfm policy); the gid is computed
-    as GROUPING bits on both engines (DuckDB's GROUPING_ID argument
-    order is engine-defined, so the bit assembly is spelled out).
-
-    Plan/scale: Catalyst compiles CUBE to ONE Expand (4 replicas per
-    input row) + one map-side-combining hash agg — one shuffle of
-    4×|groups| partials, NOT four scans; at 100 TB the expand factor
-    2^k is the knob to watch (k=2 here; wide cubes should enumerate
-    explicit GROUPING SETS instead)."""
-    o = table(spark, sf_dir, "orders")
-    return o.cube("o_orderstatus", "o_orderpriority").agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum(F.round(F.col("o_totalprice") * 100, 0).cast("long"))
-        .cast("long")
-        .alias("total_cents"),
-        (
-            F.grouping("o_orderstatus") * 2 + F.grouping("o_orderpriority")
-        )
-        .cast("int")
-        .alias("gid"),
-    )
 
 
 # --------------------------------------------------------------------------
@@ -1748,7 +1713,7 @@ def agg_winsorized_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-@register(
+register_sql(
     "agg_weighted_percentile",
     tags=("b4",),
     oracle="""
@@ -1787,62 +1752,6 @@ def agg_winsorized_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM r GROUP BY l_returnflag
     """,
 )
-def agg_weighted_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Quantity-WEIGHTED percentiles of unit price per return flag:
-    each line counts with weight = its quantity, and the weighted
-    p50/p90/p99 are the first price whose running weight clears p% of
-    the total (lower weighted quantile). The unweighted median
-    (`agg_percentile_exact`) answers "the median LINE"; this answers
-    "the median UNIT SOLD" — the number pricing and unit-economics
-    reviews actually want, and the two diverge exactly when cheap
-    items ship in bulk. Same construction handles any weight column
-    (tokens per doc, revenue per order).
-
-    Exactness: integer cents, integer weights (quantities round to
-    whole units in this schema), and the rank test cross-multiplies
-    — 100·cumw ≥ p·totw — so there is no division anywhere, no
-    interpolation, no float.
-
-    Plan/scale: one rank window PARTITIONED BY GROUP (per-group
-    parallel sort, no global sort — the `agg_winsorized_mean` shape)
-    collapsing into a 3-threshold conditional agg; same bounded-
-    cardinality framing as every exact order statistic here, with
-    `agg_approx` as the sketch path at full scale."""
-    li = table(spark, sf_dir, "lineitem")
-    c = li.select(
-        "l_returnflag",
-        F.round(F.col("l_extendedprice") * 100, 0)
-        .cast("long")
-        .alias("cents"),
-        F.round("l_quantity").cast("long").alias("w"),
-    )
-    w_run = (
-        Window.partitionBy("l_returnflag")
-        .orderBy("cents", "w")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    w_all = Window.partitionBy("l_returnflag")
-    r = c.select(
-        "l_returnflag",
-        "cents",
-        F.sum("w").over(w_run).alias("cumw"),
-        F.sum("w").over(w_all).alias("totw"),
-    )
-    return r.groupBy("l_returnflag").agg(
-        F.max("totw").cast("long").alias("total_weight"),
-        F.expr(
-            "CAST(min(CASE WHEN 100 * cumw >= 50 * totw THEN cents END)"
-            " AS BIGINT)"
-        ).alias("wp50_cents"),
-        F.expr(
-            "CAST(min(CASE WHEN 100 * cumw >= 90 * totw THEN cents END)"
-            " AS BIGINT)"
-        ).alias("wp90_cents"),
-        F.expr(
-            "CAST(min(CASE WHEN 100 * cumw >= 99 * totw THEN cents END)"
-            " AS BIGINT)"
-        ).alias("wp99_cents"),
-    )
 
 
 # --------------------------------------------------------------------------

@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 
 from nchu_bigdata_spark.compat import dround, dsum
 from nchu_bigdata_spark.io import local_rows, table
-from nchu_bigdata_spark.registry import register
+from nchu_bigdata_spark.registry import register, register_sql
 
 
 @register(
@@ -72,7 +72,7 @@ def join_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+register_sql(
     "join_outer",
     tags=("b3",),
     oracle="""
@@ -86,20 +86,6 @@ def join_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
         GROUP BY c.c_custkey
     """,
 )
-def join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LEFT OUTER join preserving customers with no matching orders
-    (COUNT over the null-extended side counts 0)."""
-    cust = table(spark, sf_dir, "customer")
-    orders = table(spark, sf_dir, "orders")
-    joined = cust.join(
-        orders,
-        (cust.c_custkey == orders.o_custkey) & (orders.o_orderstatus == "F"),
-        "left",
-    )
-    return joined.groupBy("c_custkey").agg(
-        F.count("o_orderkey").alias("n_orders"),
-        dsum("o_totalprice").alias("spend"),
-    )
 
 
 @register(
@@ -391,7 +377,10 @@ def join_null_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-@register(
+# Catalyst decorrelates each EXISTS into an ExistenceJoin, a hash join
+# that emits a BOOLEAN instead of dropping rows, so output cardinality
+# is exactly |customer| whatever the order fan-out.
+register_sql(
     "join_existence",
     tags=("b5",),
     oracle="""
@@ -411,39 +400,6 @@ def join_null_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM customer c
     """,
 )
-def join_existence(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXISTS as a PROJECTED FLAG — Catalyst's third join consumption
-    shape beside semi (keep) and anti (drop): keep EVERY row and
-    annotate it with membership bits. The feature-engineering /
-    segmentation staple ("has an open order", "has a big-ticket
-    order"): written naively it's two correlated subqueries per
-    customer; Catalyst decorrelates each into an ExistenceJoin — a
-    hash join that emits a BOOLEAN instead of dropping rows, asserted
-    in the plan audit.
-
-    Plan/scale: two ExistenceJoins, each ONE hash join against the
-    (pre-filtered, map-side-pruned) orders projection — the status
-    and price predicates push into the build sides, so each build is
-    the qualifying-orders subset, not all orders. No row explosion:
-    output cardinality is exactly |customer| whatever the order
-    fan-out — the property that makes existence flags safe where a
-    plain left join would duplicate customers."""
-    cust = table(spark, sf_dir, "customer")
-    orders = table(spark, sf_dir, "orders")
-    cust.createOrReplaceTempView("je_customer")
-    orders.createOrReplaceTempView("je_orders")
-    return spark.sql(
-        """
-        SELECT c_custkey,
-               EXISTS(SELECT 1 FROM je_orders o
-                      WHERE o.o_custkey = c.c_custkey
-                        AND o.o_orderstatus = 'O') AS has_open,
-               EXISTS(SELECT 1 FROM je_orders o
-                      WHERE o.o_custkey = c.c_custkey
-                        AND o.o_totalprice > 200000) AS has_big
-        FROM je_customer c
-        """
-    )
 
 
 # --------------------------------------------------------------------------

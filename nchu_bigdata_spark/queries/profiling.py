@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from nchu_bigdata_spark.io import table
-from nchu_bigdata_spark.registry import register
+from nchu_bigdata_spark.registry import register, register_sql
 
 # Profiled columns of `orders`; (name, is_bigint_key) — key ranges are
 # emitted only for exact-integer columns (portable bit-for-bit; float/
@@ -918,51 +918,13 @@ def _key_oracle_arm(cols: tuple[str, ...]) -> str:
     """
 
 
-@register(
+register_sql(
     "dq_key_discovery",
     tags=("b4",),
     oracle="\nUNION ALL\n".join(
         _key_oracle_arm(c) for c in _KEY_CANDIDATES
     ),
 )
-def dq_key_discovery(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Candidate-key discovery: profile a fixed ladder of column
-    combinations over lineitem and report, per candidate, the exact
-    uniqueness evidence — row count, distinct-key count, largest
-    duplicate group, rows living in duplicate groups, and the is_key
-    verdict. The schema-inference step every warehouse loader runs
-    before declaring constraints — and the verdicts are EVIDENCE, not
-    schema: TPC-H declares (l_orderkey, l_linenumber) as lineitem's
-    primary key, but this corpus's generator doesn't honor it at every
-    SF, so the profiler reports what the data actually supports
-    (`dq_referential_integrity` checks declared keys hold across
-    tables; this discovers which keys exist at all).
-
-    Plan/scale: one composite-key hash aggregation per candidate —
-    each combines map-side before its shuffle, so the exchanged
-    volume per candidate is its distinct-key cardinality, not table
-    rows; the candidate ladder is a fixed constant, so total cost is
-    candidates × one linear agg. Verdicts are exact counts, not
-    sampled — a single duplicate anywhere flips is_key."""
-    li = table(spark, sf_dir, "lineitem")
-    arms = []
-    for cols in _KEY_CANDIDATES:
-        g = li.groupBy(*cols).agg(F.count(F.lit(1)).alias("c"))
-        arms.append(
-            g.agg(
-                F.sum("c").cast("long").alias("n_rows"),
-                F.count(F.lit(1)).cast("long").alias("n_keys"),
-                F.max("c").cast("long").alias("max_group"),
-                F.sum(F.when(F.col("c") > 1, F.col("c")).otherwise(0))
-                .cast("long")
-                .alias("n_dup_rows"),
-                (F.max("c") == 1).alias("is_key"),
-            ).select(F.lit("+".join(cols)).alias("candidate"), "*")
-        )
-    out = arms[0]
-    for a in arms[1:]:
-        out = out.unionAll(a)
-    return out
 
 
 # --------------------------------------------------------------------------

@@ -26,7 +26,7 @@ from pyspark.sql import types as T
 from nchu_bigdata_spark.compat import dround, dsum
 from nchu_bigdata_spark.io import table
 from nchu_bigdata_spark.materialize import shared_intermediate
-from nchu_bigdata_spark.registry import register
+from nchu_bigdata_spark.registry import register, register_sql
 
 _SCRATCH = os.path.join(os.path.dirname(os.path.dirname(os.path.dirname(__file__))), ".scratch")
 
@@ -73,7 +73,9 @@ def _write_one_file_per_bucket(
             )
 
 
-@register(
+# Filter + projection reach the parquet reader (PushedFilters, a 4-column
+# ReadSchema).
+register_sql(
     "scan_parquet",
     tags=("b1",),
     oracle="""
@@ -82,13 +84,6 @@ def _write_one_file_per_bucket(
         WHERE l_returnflag = 'R'
     """,
 )
-def scan_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Parquet scan with filter + projection pushed into the reader
-    (``.explain`` shows PushedFilters + a 4-column ReadSchema)."""
-    li = table(spark, sf_dir, "lineitem")
-    return li.filter(F.col("l_returnflag") == "R").select(
-        "l_orderkey", "l_linenumber", "l_quantity"
-    )
 
 
 _CSV_SCHEMA = T.StructType(
@@ -233,7 +228,7 @@ def project_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+register_sql(
     "filter_pred",
     tags=("b2",),
     oracle="""
@@ -246,15 +241,6 @@ def project_select(spark: SparkSession, sf_dir: str) -> DataFrame:
         OR (c_name LIKE '%001%' AND c_nationkey IS NOT NULL)
     """,
 )
-def filter_pred(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Conjunctive/disjunctive predicates: IN, BETWEEN, LIKE, IS NULL —
-    all pushed to the parquet scan where the format supports them."""
-    c = table(spark, sf_dir, "customer")
-    pred = (
-        F.col("c_mktsegment").isin("BUILDING", "AUTOMOBILE")
-        & F.col("c_acctbal").between(1000, 8000)
-    ) | (F.col("c_name").like("%001%") & F.col("c_nationkey").isNotNull())
-    return c.filter(pred).select("c_custkey", "c_name", "c_mktsegment", "c_acctbal")
 
 
 @register(

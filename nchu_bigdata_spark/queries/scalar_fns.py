@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 
 from nchu_bigdata_spark.compat import dround
 from nchu_bigdata_spark.io import table
-from nchu_bigdata_spark.registry import register
+from nchu_bigdata_spark.registry import register, register_sql
 
 
 @register(
@@ -303,7 +303,7 @@ def fn_url(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+register_sql(
     "fn_conditional",
     tags=("b7",),
     oracle="""
@@ -326,39 +326,6 @@ def fn_url(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM lineitem
     """,
 )
-def fn_conditional(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Conditional / null-handling scalar family (§2.B-7): CASE WHEN
-    chains, COALESCE, NULLIF, LEAST/GREATEST — the branch logic every
-    transformation layer is built from, with the NULL-propagation
-    corners pinned (NULLIF producing a NULL that COALESCE then
-    recovers; LEAST/GREATEST clamping against literals).
-
-    All branches are pure codegen projections over one scan — zero
-    shuffles; money comparisons export exact cents per compat
-    policy."""
-    li = table(spark, sf_dir, "lineitem")
-    return li.select(
-        "l_orderkey",
-        "l_linenumber",
-        F.when(F.col("l_quantity") < 10, "small")
-        .when(F.col("l_quantity") < 30, "medium")
-        .otherwise("large")
-        .alias("qty_band"),
-        F.coalesce(
-            F.nullif(F.col("l_returnflag"), F.lit("N")),
-            F.col("l_linestatus"),
-            F.lit("?"),
-        ).alias("flag_or_status"),
-        F.round(F.least(F.col("l_quantity"), F.lit(25.0)) * 100, 0)
-        .cast("long")
-        .alias("capped_cents"),
-        F.round(F.greatest(F.col("l_quantity"), F.lit(5.0)) * 100, 0)
-        .cast("long")
-        .alias("floored_cents"),
-        F.when(F.nullif(F.col("l_linenumber"), F.lit(1)).isNull(), "first")
-        .otherwise("rest")
-        .alias("line_class"),
-    )
 
 
 # --------------------------------------------------------------------------

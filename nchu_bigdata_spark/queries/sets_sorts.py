@@ -13,10 +13,11 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from nchu_bigdata_spark.io import table
-from nchu_bigdata_spark.registry import register
+from nchu_bigdata_spark.registry import register, register_sql
 
 
-@register(
+# Global ORDER BY + LIMIT compiles to TakeOrderedAndProject (no full sort).
+register_sql(
     "sort_limit",
     tags=("b6",),
     oracle="""
@@ -26,14 +27,6 @@ from nchu_bigdata_spark.registry import register
         LIMIT 100
     """,
 )
-def sort_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Global ORDER BY + LIMIT → TakeOrderedAndProject (no full sort)."""
-    o = table(spark, sf_dir, "orders")
-    return (
-        o.orderBy(F.col("o_totalprice").desc(), "o_orderkey")
-        .limit(100)
-        .select("o_orderkey", "o_totalprice", "o_orderpriority")
-    )
 
 
 @register(
@@ -62,62 +55,29 @@ def topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _f_order_custkeys(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Custkeys holding at least one finished ('F') order."""
-    o = table(spark, sf_dir, "orders")
-    return o.filter(F.col("o_orderstatus") == "F").select(
-        F.col("o_custkey").alias("custkey")
-    )
-
-
-def _building_custkeys(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Custkeys in the BUILDING market segment."""
-    c = table(spark, sf_dir, "customer")
-    return c.filter(F.col("c_mktsegment") == "BUILDING").select(
-        F.col("c_custkey").alias("custkey")
-    )
-
-
 _F_ORDERS_SQL = "SELECT o_custkey AS custkey FROM orders WHERE o_orderstatus = 'F'"
 _BUILDING_SQL = "SELECT c_custkey AS custkey FROM customer WHERE c_mktsegment = 'BUILDING'"
 
 
-@register(
+register_sql(
     "set_union",
     tags=("b6",),
     oracle=f"({_F_ORDERS_SQL}) UNION ({_BUILDING_SQL})",
 )
-def set_union(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """UNION (distinct) of two key sets."""
-    return (
-        _f_order_custkeys(spark, sf_dir)
-        .union(_building_custkeys(spark, sf_dir))
-        .distinct()
-    )
 
 
-@register(
+register_sql(
     "set_intersect",
     tags=("b6",),
     oracle=f"({_F_ORDERS_SQL}) INTERSECT ({_BUILDING_SQL})",
 )
-def set_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """INTERSECT of two key sets."""
-    return _f_order_custkeys(spark, sf_dir).intersect(
-        _building_custkeys(spark, sf_dir)
-    )
 
 
-@register(
+register_sql(
     "set_except",
     tags=("b6",),
     oracle=f"({_BUILDING_SQL}) EXCEPT ({_F_ORDERS_SQL})",
 )
-def set_except(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXCEPT (distinct): BUILDING customers with no finished order."""
-    return _building_custkeys(spark, sf_dir).subtract(
-        _f_order_custkeys(spark, sf_dir)
-    )
 
 
 # --------------------------------------------------------------------------
@@ -382,7 +342,9 @@ def agg_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-@register(
+# Spark compiles EXCEPT ALL to a per-key count difference + replicate:
+# one hash shuffle per side, no sort.
+register_sql(
     "set_except_all",
     tags=("b5",),
     oracle="""
@@ -399,27 +361,6 @@ def agg_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT o_custkey FROM orders WHERE o_orderstatus = 'F'
     """,
 )
-def set_except_all(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXCEPT ALL — bag (multiset) difference: each right-side
-    occurrence cancels exactly ONE left-side occurrence, preserving
-    multiplicity (a customer with five open orders and two finished
-    ones survives three times). The distinct EXCEPT (`set_except`)
-    answers "who appears only on the left"; EXCEPT ALL answers "how
-    MUCH more" — the reconciliation semantics ledgers and inventory
-    counts need, where every unmatched OCCURRENCE is a discrepancy
-    even when the identity matches. Completes the set-operator family
-    with its bag-algebra half (UNION ALL was always there; this is
-    its difference-side sibling).
-
-    Plan/scale: Spark compiles exceptAll to a per-key count
-    difference + replicate (one hash shuffle per side, no sort, no
-    pairwise anything) — the same aggregate shape a hand-written
-    "count left minus count right, re-explode" would be, which is
-    exactly how the multiset semantics stay scale-safe."""
-    o = table(spark, sf_dir, "orders")
-    left = o.filter(F.col("o_orderstatus") == "O").select("o_custkey")
-    right = o.filter(F.col("o_orderstatus") == "F").select("o_custkey")
-    return left.exceptAll(right)
 
 
 # --------------------------------------------------------------------------

@@ -7,9 +7,12 @@ and optimizer on declarative SQL — correlated-subquery decorrelation
 (rewritten to joins), IN-to-semi-join conversion, multi-way join
 ordering, and scan-level predicate pushdown.
 
-The subquery trio runs through ``spark.sql`` over registered temp views
-on purpose: the point is that the engine accepts ANSI subquery SQL and
-Catalyst plans it, not that we hand-build the equivalent joins.
+The subquery ids run their SQL text through ``spark.sql`` on purpose:
+the point is that the engine accepts ANSI subquery SQL and Catalyst
+plans it, not that we hand-build the equivalent joins. Where the
+oracle's text means the same in both dialects it is the implementation
+(``register_sql``); tpch_q18 and sub_recursive keep a Spark spelling of
+DuckDB's ``epoch_us``.
 
 Scale notes (100 TB):
   * ``sub_exists`` / ``sub_in`` decorrelate to semi-joins — one shuffle
@@ -30,16 +33,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from nchu_bigdata_spark.compat import dsum, sql_dsum
-from nchu_bigdata_spark.io import table
-from nchu_bigdata_spark.registry import register
+from nchu_bigdata_spark.io import sql_over_tables, table
+from nchu_bigdata_spark.registry import register, register_sql
 
 
-def _views(spark: SparkSession, sf_dir: str, *names: str) -> None:
-    for n in names:
-        table(spark, sf_dir, n).createOrReplaceTempView(n)
-
-
-@register(
+# Correlated EXISTS: Catalyst decorrelates it to a left-semi join, the
+# same physical shape as join_semi, arrived at by the optimizer.
+register_sql(
     "sub_exists",
     tags=("b11",),
     oracle="""
@@ -52,25 +52,12 @@ def _views(spark: SparkSession, sf_dir: str, *names: str) -> None:
         )
     """,
 )
-def sub_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Correlated EXISTS — Catalyst decorrelates to a left-semi join
-    (same physical shape as ``join_semi``, but arrived at from ANSI SQL
-    by the optimizer, not by hand)."""
-    _views(spark, sf_dir, "customer", "orders")
-    return spark.sql(
-        """
-        SELECT c.c_custkey, c.c_name
-        FROM customer c
-        WHERE EXISTS (
-            SELECT 1 FROM orders o
-            WHERE o.o_custkey = c.c_custkey
-              AND o.o_orderpriority = '1-URGENT'
-        )
-        """
-    )
 
 
-@register(
+# Correlated scalar subquery, decorrelated to a grouped MAX + equi-join
+# on the correlation key. MAX (not AVG) so the compared value is an
+# exact input double on both engines.
+register_sql(
     "sub_scalar",
     tags=("b11",),
     oracle="""
@@ -82,24 +69,9 @@ def sub_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     """,
 )
-def sub_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Correlated scalar subquery (per-order max line) — decorrelated to
-    a grouped MAX + equi-join on the correlation key. MAX (not AVG) so
-    the compared value is an exact input double on both engines."""
-    _views(spark, sf_dir, "lineitem")
-    return spark.sql(
-        """
-        SELECT l.l_orderkey, l.l_linenumber, l.l_extendedprice
-        FROM lineitem l
-        WHERE l.l_extendedprice = (
-            SELECT MAX(l2.l_extendedprice) FROM lineitem l2
-            WHERE l2.l_orderkey = l.l_orderkey
-        )
-        """
-    )
 
 
-@register(
+register_sql(
     "sub_in",
     tags=("b11",),
     oracle="""
@@ -111,20 +83,6 @@ def sub_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
         AND o_orderpriority NOT IN ('5-LOW', '4-NOT SPECIFIED')
     """,
 )
-def sub_in(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Uncorrelated IN subquery + NOT IN value list — IN converts to a
-    left-semi join; the NOT IN list folds to a scan predicate."""
-    _views(spark, sf_dir, "orders", "customer")
-    return spark.sql(
-        """
-        SELECT o_orderkey, o_totalprice
-        FROM orders
-        WHERE o_custkey IN (
-            SELECT c_custkey FROM customer WHERE c_mktsegment = 'BUILDING'
-        )
-        AND o_orderpriority NOT IN ('5-LOW', '4-NOT SPECIFIED')
-        """
-    )
 
 
 @register(
@@ -310,8 +268,9 @@ def tpch_q18(spark: SparkSession, sf_dir: str) -> DataFrame:
     TakeOrderedAndProject with the o_orderkey tie-break making LIMIT
     deterministic on any engine. l_quantity is integral, so the double
     SUM is exact (< 2^53) and hash-comparable across engines."""
-    _views(spark, sf_dir, "customer", "orders", "lineitem")
-    return spark.sql(
+    return sql_over_tables(
+        spark,
+        sf_dir,
         """
         SELECT c.c_name, c.c_custkey, o.o_orderkey,
                unix_micros(cast(o.o_orderdate AS timestamp)) AS orderdate_us,
@@ -376,8 +335,9 @@ def sub_recursive(spark: SparkSession, sf_dir: str) -> DataFrame:
     table — activity-cardinality, not event-cardinality — and each
     step is one user-keyed equi-join; depth is bounded by the longest
     streak (8 at sf0.01), far under the engine's recursion cap."""
-    _views(spark, sf_dir, "events")
-    return spark.sql(
+    return sql_over_tables(
+        spark,
+        sf_dir,
         f"""
         WITH RECURSIVE days AS (
             SELECT DISTINCT user_id,
@@ -402,7 +362,10 @@ def sub_recursive(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+# Correlated LATERAL with ORDER BY + LIMIT (top-3 orders per customer)
+# decorrelates into a per-key WindowGroupLimit + one equi join; the
+# lateral never executes per row.
+register_sql(
     "sub_lateral",
     tags=("b11",),
     oracle="""
@@ -417,32 +380,6 @@ def sub_recursive(spark: SparkSession, sf_dir: str) -> DataFrame:
         ) t ON TRUE
     """,
 )
-def sub_lateral(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Correlated LATERAL subquery with ORDER BY + LIMIT: each
-    customer's top-3 orders by value, written as the ANSI LATERAL join
-    (the "top-N per row" idiom ORMs and report generators emit).
-
-    The point is what Catalyst does with it: the correlated per-row
-    LIMIT — naively a re-executed subquery per customer row —
-    DECORRELATES into a per-key WindowGroupLimit (partial heap before
-    the exchange, final after) + one equi join. Verified by the plan
-    audit: the lateral NEVER executes per-row; at 100 TB this is a
-    single orders shuffle with heap-pruned wire volume, same shape as
-    ``topk_per_group`` arrived at from SQL by the optimizer."""
-    _views(spark, sf_dir, "customer", "orders")
-    return spark.sql(
-        """
-        SELECT c.c_custkey, t.o_orderkey, t.o_totalprice
-        FROM customer c
-        JOIN LATERAL (
-            SELECT o_orderkey, o_totalprice
-            FROM orders o
-            WHERE o.o_custkey = c.c_custkey
-            ORDER BY o_totalprice DESC, o_orderkey
-            LIMIT 3
-        ) t
-        """
-    )
 
 
 @register(
@@ -588,7 +525,8 @@ def sub_division(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-@register(
+# NOT IN compiles to a NULL-AWARE anti join, NOT EXISTS to a plain one.
+register_sql(
     "sub_not_in_null",
     tags=("b5",),
     oracle="""
@@ -617,44 +555,3 @@ def sub_division(spark: SparkSession, sf_dir: str) -> DataFrame:
                  AS BIGINT) AS n_null_keys
     """,
 )
-def sub_not_in_null(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The NOT IN null trap, made measurable: against a key list that
-    contains NULLs (every 7th lineitem's partkey nulled, by spec),
-    ``NOT IN`` returns ZERO rows — under three-valued logic,
-    ``x <> NULL`` is UNKNOWN, so no row can prove it's absent — while
-    ``NOT EXISTS`` with an equality predicate returns the real
-    complement. This is the single most-filed SQL correctness bug in
-    existence, and an engine claiming drop-in parity must honor the
-    ANSI semantics of BOTH forms, so the operator pins all three
-    numbers (the two counts and the null count that explains the gap)
-    as a cross-engine regression surface. Catalyst's plan shape is
-    part of the story: NOT IN compiles to a NULL-AWARE anti join
-    (existence flags), not the plain anti join NOT EXISTS gets.
-
-    Plan/scale: both subqueries decorrelate to anti joins over the
-    keys projection; the three 1-row counts broadcast-combine. Output
-    is one row."""
-    li = table(spark, sf_dir, "lineitem")
-    part = table(spark, sf_dir, "part")
-    keys = li.select(
-        F.when(F.col("l_linenumber") == 7, None)
-        .otherwise(F.col("l_partkey"))
-        .alias("k")
-    )
-    keys.createOrReplaceTempView("_nin_keys")
-    part.createOrReplaceTempView("_nin_part")
-    spark_df = part.sparkSession.sql(
-        """
-        SELECT
-            CAST((SELECT COUNT(*) FROM _nin_part
-                  WHERE p_partkey NOT IN (SELECT k FROM _nin_keys))
-                 AS BIGINT) AS n_not_in,
-            CAST((SELECT COUNT(*) FROM _nin_part p
-                  WHERE NOT EXISTS (SELECT 1 FROM _nin_keys
-                                    WHERE _nin_keys.k = p.p_partkey))
-                 AS BIGINT) AS n_not_exists,
-            CAST((SELECT COUNT(*) FROM _nin_keys WHERE k IS NULL)
-                 AS BIGINT) AS n_null_keys
-        """
-    )
-    return spark_df

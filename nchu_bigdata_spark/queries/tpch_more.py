@@ -36,7 +36,7 @@ from pyspark.sql import functions as F
 
 from nchu_bigdata_spark.compat import davg, dround, dsum, sql_davg, sql_dround, sql_dsum
 from nchu_bigdata_spark.io import table
-from nchu_bigdata_spark.registry import register
+from nchu_bigdata_spark.registry import register, register_sql
 
 # Q7's trading-nation pair (fixture nations are NATION_0..NATION_24).
 _Q7_A, _Q7_B = "NATION_1", "NATION_2"
@@ -103,7 +103,10 @@ def tpch_q7(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+# TPC-H Q12 shape. The fixture has no l_shipmode/l_receiptdate, so the
+# group key is l_linestatus and lateness is ship-after-order, a
+# cross-table predicate that must ride the join, not the scan.
+register_sql(
     "tpch_q12",
     tags=("b11",),
     oracle="""
@@ -120,31 +123,6 @@ def tpch_q7(spark: SparkSession, sf_dir: str) -> DataFrame:
         GROUP BY l.l_linestatus
     """,
 )
-def tpch_q12(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q12 shape: shipping-priority classification. The fixture
-    schema has no l_shipmode/l_receiptdate, so the group key is
-    l_linestatus and the lateness predicate is ship-after-order
-    (``l_shipdate >= o_orderdate`` — a cross-table residual that must
-    ride the join, not the scan).
-
-    Plan: the ship-year range pushes into the lineitem SCAN
-    (PushedFilters), the cross-table predicate evaluates on the joined
-    row, and the CASE classification happens inside one partial+final
-    hash aggregate — 2 result rows cross the final exchange."""
-    high = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
-    orders = table(spark, sf_dir, "orders")
-    li = table(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= "1997-01-01") & (F.col("l_shipdate") < "1998-01-01")
-    )
-    return (
-        orders.join(li, orders.o_orderkey == li.l_orderkey)
-        .filter(F.col("l_shipdate") >= F.col("o_orderdate"))
-        .groupBy(F.col("l_linestatus").alias("ship_class"))
-        .agg(
-            F.sum(F.when(high, 1).otherwise(0)).alias("high_line_count"),
-            F.sum(F.when(~high, 1).otherwise(0)).alias("low_line_count"),
-        )
-    )
 
 
 # Q17's brand filter and the avg-quantity threshold factor. The
@@ -301,7 +279,10 @@ def tpch_q14(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+# TPC-H Q4 shape. The fixture has no commit/receipt dates, so lateness
+# is ship-after-order. EXISTS is a semi join: lineitem match
+# multiplicity can never duplicate an order row.
+register_sql(
     "tpch_q4",
     tags=("b11",),
     oracle="""
@@ -318,38 +299,13 @@ def tpch_q14(spark: SparkSession, sf_dir: str) -> DataFrame:
         GROUP BY o.o_orderpriority
     """,
 )
-def tpch_q4(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q4 shape: order-priority checking — count a quarter's
-    orders that had at least one late-shipping line (the fixture has
-    no commit/receipt dates, so lateness is ship-after-order; the
-    correlated comparison rides the semi-join condition).
-
-    Plan: the EXISTS decorrelates to a LEFT SEMI join with the
-    cross-table date comparison as the join residual — lineitem
-    match multiplicity can never duplicate an order row, which is the
-    entire point of semi-join semantics (a plain join + distinct
-    would shuffle the blowup first and dedup after)."""
-    from nchu_bigdata_spark.queries.subqueries import _views
-
-    _views(spark, sf_dir, "orders", "lineitem")
-    return spark.sql(
-        """
-        SELECT o.o_orderpriority,
-               COUNT(*) AS order_count
-        FROM orders o
-        WHERE o.o_orderdate >= TIMESTAMP '1997-07-01'
-          AND o.o_orderdate <  TIMESTAMP '1997-10-01'
-          AND EXISTS (
-              SELECT 1 FROM lineitem l
-              WHERE l.l_orderkey = o.o_orderkey
-                AND l.l_shipdate > o.o_orderdate
-          )
-        GROUP BY o.o_orderpriority
-        """
-    )
 
 
-@register(
+# TPC-H Q13 shape; the priority filter stands in for the original
+# comment-pattern filter. It rides the LEFT JOIN condition, not the
+# WHERE: in the WHERE it would delete the zero-order customers the
+# query exists to count.
+register_sql(
     "tpch_q13",
     tags=("b11",),
     oracle="""
@@ -366,32 +322,14 @@ def tpch_q4(spark: SparkSession, sf_dir: str) -> DataFrame:
         GROUP BY c_count
     """,
 )
-def tpch_q13(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q13 shape: customer distribution — how many customers
-    placed 0, 1, 2, … qualifying orders (the priority filter stands in
-    for the original comment-pattern filter).
-
-    The two shapes that matter:
-      * the filter rides the LEFT JOIN **condition**, not the WHERE —
-        moving it to WHERE would silently delete the zero-order
-        customers the query exists to count;
-      * a count-of-counts: first agg keys on customer (fact-sized),
-        the second on the count value (tiny) — the histogram pattern.
-    COUNT(o_orderkey) counts matches only (NULL from the outer side
-    doesn't count), yielding the 0 bucket for free."""
-    cust = table(spark, sf_dir, "customer")
-    orders = table(spark, sf_dir, "orders").filter(
-        F.col("o_orderpriority") != "5-LOW"
-    )
-    per_cust = (
-        cust.join(orders, cust.c_custkey == orders.o_custkey, "left")
-        .groupBy(cust.c_custkey)
-        .agg(F.count("o_orderkey").alias("c_count"))
-    )
-    return per_cust.groupBy("c_count").agg(F.count(F.lit(1)).alias("custdist"))
 
 
-@register(
+# TPC-H Q22 shape. Every fixture customer has SOME order, so
+# inactivity is no-URGENT-order. The threshold is EXACT: a decimal(20,6)
+# sum divided by the count in ONE IEEE division gives the bit-identical
+# double on both engines, so no acctbal can straddle it (a 6dp ROUND of
+# a double AVG left an ulp-at-the-grid tail).
+register_sql(
     "tpch_q22",
     tags=("b11",),
     oracle=f"""
@@ -412,43 +350,6 @@ def tpch_q13(spark: SparkSession, sf_dir: str) -> DataFrame:
         GROUP BY c.c_nationkey
     """,
 )
-def tpch_q22(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q22 shape: global-sales-opportunity — wealthy-but-inactive
-    customers per nation (above-average positive balance, no urgent
-    orders; the fixture keys geography by nationkey, and every
-    customer has SOME order, so inactivity is no-URGENT-order).
-
-    Plan: the uncorrelated scalar AVG computes once (1-row subquery,
-    broadcast into the filter). The threshold is EXACT: an associative
-    decimal(20,6) sum divided by the count in ONE IEEE division — both
-    engines produce the bit-identical double, so no acctbal can ever
-    straddle it (the earlier 6dp-ROUND-of-double-AVG left a residual
-    ulp-at-the-grid tail; round-7 hardening pass). The NOT EXISTS
-    decorrelates to a LEFT ANTI join on the customer key. One
-    customer-keyed shuffle total."""
-    from nchu_bigdata_spark.queries.subqueries import _views
-
-    _views(spark, sf_dir, "customer", "orders")
-    inner = spark.sql(
-        """
-        SELECT c.c_nationkey, c.c_acctbal
-        FROM customer c
-        WHERE c.c_acctbal > (
-                  SELECT CAST(SUM(CAST(c2.c_acctbal AS DECIMAL(20,6))) AS DOUBLE)
-                         / CAST(COUNT(*) AS DOUBLE)
-                  FROM customer c2 WHERE c2.c_acctbal > 0.0
-              )
-          AND NOT EXISTS (
-                  SELECT 1 FROM orders o
-                  WHERE o.o_custkey = c.c_custkey
-                    AND o.o_orderpriority = '1-URGENT'
-              )
-        """
-    )
-    return inner.groupBy("c_nationkey").agg(
-        F.count(F.lit(1)).alias("numcust"),
-        dsum("c_acctbal").alias("totacctbal"),
-    )
 
 
 @register(
@@ -496,7 +397,11 @@ def tpch_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+# TPC-H Q16 shape; lineitem stands in for the fixture's missing
+# partsupp, and the excluded set is negative-balance suppliers. NOT IN
+# (unlike NOT EXISTS) is null-aware: one NULL in the subquery empties
+# the result.
+register_sql(
     "tpch_q16",
     tags=("b11",),
     oracle="""
@@ -512,34 +417,6 @@ def tpch_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
         GROUP BY p.p_brand, p.p_size
     """,
 )
-def tpch_q16(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q16 shape: how many (well-standing) suppliers can supply
-    parts per brand/size (lineitem stands in for the fixture's missing
-    partsupp; the excluded set is negative-balance suppliers).
-
-    The planner feature on display is NOT IN over a subquery: unlike
-    NOT EXISTS, its three-valued NULL semantics force Catalyst's
-    null-aware anti join (a single NULL in the subquery empties the
-    result); the audit pins the anti-join path. The per-cell distinct
-    supplier count is the same partial-distinct shuffle as
-    ``agg_distinct``."""
-    from nchu_bigdata_spark.queries.subqueries import _views
-
-    _views(spark, sf_dir, "lineitem", "part", "supplier")
-    return spark.sql(
-        """
-        SELECT p.p_brand, p.p_size,
-               COUNT(DISTINCT l.l_suppkey) AS supplier_cnt
-        FROM lineitem l
-        JOIN part p ON p.p_partkey = l.l_partkey
-        WHERE p.p_brand <> 'Brand#1'
-          AND p.p_size IN (1, 5, 9, 13)
-          AND l.l_suppkey NOT IN (
-              SELECT s_suppkey FROM supplier WHERE s_acctbal < 0
-          )
-        GROUP BY p.p_brand, p.p_size
-        """
-    )
 
 
 @register(
@@ -638,7 +515,10 @@ def tpch_q11(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+# TPC-H Q21 shape (lateness = ship-after-order in the fixture schema):
+# an EXISTS and a NOT EXISTS correlated to the same outer row over the
+# same table.
+register_sql(
     "tpch_q21",
     tags=("b11",),
     oracle="""
@@ -661,42 +541,6 @@ def tpch_q11(spark: SparkSession, sf_dir: str) -> DataFrame:
         GROUP BY l1.l_suppkey
     """,
 )
-def tpch_q21(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q21 shape: suppliers who kept orders waiting — per
-    supplier, multi-supplier orders where THEIR line shipped >60 days
-    late and NO other supplier's line did (lateness = ship-after-order
-    in the fixture schema).
-
-    The planner stress: BOTH an EXISTS and a NOT EXISTS correlated to
-    the same outer row over the SAME table — Catalyst plans one
-    left-semi and one left-anti join against lineitem with the date
-    condition riding the anti side's residual, never re-scanning
-    lineitem per row; all three legs share the l_orderkey key, so AQE
-    reuses the exchange layout across them."""
-    from nchu_bigdata_spark.queries.subqueries import _views
-
-    _views(spark, sf_dir, "lineitem", "orders")
-    return spark.sql(
-        """
-        SELECT l1.l_suppkey AS s_suppkey,
-               COUNT(DISTINCT l1.l_orderkey) AS numwait
-        FROM lineitem l1
-        JOIN orders o ON o.o_orderkey = l1.l_orderkey
-        WHERE l1.l_shipdate > o.o_orderdate + INTERVAL 60 DAY
-          AND EXISTS (
-              SELECT 1 FROM lineitem l2
-              WHERE l2.l_orderkey = l1.l_orderkey
-                AND l2.l_suppkey <> l1.l_suppkey
-          )
-          AND NOT EXISTS (
-              SELECT 1 FROM lineitem l3
-              WHERE l3.l_orderkey = l1.l_orderkey
-                AND l3.l_suppkey <> l1.l_suppkey
-                AND l3.l_shipdate > o.o_orderdate + INTERVAL 60 DAY
-          )
-        GROUP BY l1.l_suppkey
-        """
-    )
 
 
 # --------------------------------------------------------------------------
@@ -704,7 +548,10 @@ def tpch_q21(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-@register(
+# TPC-H Q8 shape. Numerator and denominator are exact decimal sums; the
+# share is ONE IEEE division of their double casts, bit-identical on
+# both engines (same policy as tpch_q14).
+register_sql(
     "tpch_q8",
     tags=("b11",),
     oracle=f"""
@@ -741,61 +588,6 @@ def tpch_q21(spark: SparkSession, sf_dir: str) -> DataFrame:
         GROUP BY o_year
     """,
 )
-def tpch_q8(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q8 shape: national market share — NATION_3's slice of the
-    ASIA-customer STANDARD-part order volume by year. The planner
-    benchmark: an 8-way star join where the region filter must prune
-    through TWO nation hops (customer side) while the supplier-side
-    nation join stays unfiltered (it feeds the CASE, not the WHERE).
-
-    Determinism: numerator and denominator are exact associative
-    decimal sums; the share is ONE IEEE division of their decimal→
-    double casts — bit-identical on both engines, no rounding grid
-    (same policy as tpch_q14).
-
-    Plan: all five dims broadcast (part is the largest at 2000 rows ×
-    SF); lineitem⋈orders is the one big shuffle; the date range pushes
-    to the orders scan and the p_type filter to the part scan, so
-    AQE sees a heavily-reduced probe side. At 100 TB the share math
-    stays a 2-column agg over the joined fact — no second pass."""
-    from nchu_bigdata_spark.queries.subqueries import _views
-
-    _views(
-        spark, sf_dir,
-        "part", "lineitem", "supplier", "orders", "customer", "nation",
-        "region",
-    )
-    vol = spark.sql(
-        """
-        SELECT CAST(EXTRACT(year FROM o.o_orderdate) AS INT) AS o_year,
-               CAST(l.l_extendedprice * (1 - l.l_discount)
-                    AS DECIMAL(20,6)) AS volume,
-               n2.n_name AS supp_nation
-        FROM part p
-        JOIN lineitem l ON p.p_partkey = l.l_partkey
-        JOIN supplier s ON s.s_suppkey = l.l_suppkey
-        JOIN orders o   ON o.o_orderkey = l.l_orderkey
-        JOIN customer c ON c.c_custkey = o.o_custkey
-        JOIN nation n1  ON n1.n_nationkey = c.c_nationkey
-        JOIN region r   ON r.r_regionkey = n1.n_regionkey
-        JOIN nation n2  ON n2.n_nationkey = s.s_nationkey
-        WHERE r.r_name = 'ASIA'
-          AND p.p_type = 'STANDARD'
-          AND o.o_orderdate >= TIMESTAMP '1996-01-01'
-          AND o.o_orderdate <  TIMESTAMP '1998-01-01'
-        """
-    )
-    nat = F.sum(
-        F.when(F.col("supp_nation") == "NATION_3", F.col("volume")).otherwise(
-            F.lit(0).cast("decimal(20,6)")
-        )
-    ).cast("decimal(38,6)")
-    tot = F.sum("volume").cast("decimal(38,6)")
-    return vol.groupBy("o_year").agg(
-        nat.alias("nation_volume"),
-        tot.alias("total_volume"),
-        (nat.cast("double") / tot.cast("double")).alias("mkt_share"),
-    )
 
 
 # --------------------------------------------------------------------------
@@ -803,7 +595,10 @@ def tpch_q8(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-@register(
+# TPC-H Q9 shape. The fixture has no partsupp/ps_supplycost, so unit
+# cost stands in as 0.4 × p_retailprice. The per-row profit is cast to
+# decimal(20,6) BEFORE the sum, so the aggregate is order-independent.
+register_sql(
     "tpch_q9",
     tags=("b11",),
     oracle=f"""
@@ -821,40 +616,6 @@ def tpch_q8(spark: SparkSession, sf_dir: str) -> DataFrame:
         GROUP BY n.n_name, CAST(EXTRACT(year FROM o.o_orderdate) AS INT)
     """,
 )
-def tpch_q9(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q9 shape: product-type profit by supplier nation and year.
-    The fixture has no partsupp/ps_supplycost, so unit cost stands in
-    as ``0.4 × p_retailprice`` (deterministic, schema-local — the same
-    stand-in discipline as q16's lineitem-for-partsupp); the SHAPE —
-    LIKE-filtered part dim, 5-way join, profit expression mixing THREE
-    tables' columns inside one aggregate — is Q9's.
-
-    Determinism: the per-row profit expression is identical IEEE
-    arithmetic on identical doubles, cast to decimal(20,6) BEFORE the
-    sum, so the aggregate is associative and order-independent.
-
-    Plan: part (LIKE-filtered) and nation broadcast; lineitem⋈orders
-    is the big shuffle; profit folds into ONE partial+final hash agg
-    keyed by the (nation, year) pair."""
-    from nchu_bigdata_spark.queries.subqueries import _views
-
-    _views(spark, sf_dir, "part", "lineitem", "supplier", "orders", "nation")
-    return spark.sql(
-        """
-        SELECT n.n_name AS nation,
-               CAST(EXTRACT(year FROM o.o_orderdate) AS INT) AS o_year,
-               CAST(SUM(CAST(l.l_extendedprice * (1 - l.l_discount)
-                             - 0.4 * p.p_retailprice * l.l_quantity
-                             AS DECIMAL(20,6))) AS DECIMAL(38,6)) AS profit
-        FROM part p
-        JOIN lineitem l ON p.p_partkey = l.l_partkey
-        JOIN supplier s ON s.s_suppkey = l.l_suppkey
-        JOIN orders o   ON o.o_orderkey = l.l_orderkey
-        JOIN nation n   ON n.n_nationkey = s.s_nationkey
-        WHERE p.p_name LIKE '%widget%'
-        GROUP BY n.n_name, CAST(EXTRACT(year FROM o.o_orderdate) AS INT)
-        """
-    )
 
 
 # --------------------------------------------------------------------------
@@ -862,7 +623,13 @@ def tpch_q9(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-@register(
+# TPC-H Q20 shape. The fixture has no partsupp/ps_availqty, so stock
+# stands in as the part's lifetime shipped quantity per supplier, and
+# `ps_availqty > 0.5 × year_qty` becomes `year_qty × 2 > total_qty`:
+# exact integer arithmetic (fixture quantities are integral). Without
+# the `q_total >= 80` floor, single-shipment pairs trivially pass and
+# every supplier is selected.
+register_sql(
     "tpch_q20",
     tags=("b11",),
     oracle="""
@@ -889,63 +656,21 @@ def tpch_q9(spark: SparkSession, sf_dir: str) -> DataFrame:
         ORDER BY s.s_name
     """,
 )
-def tpch_q20(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q20 shape: potential part promotion — suppliers who moved
-    more than half of a 'small%' part's lifetime volume inside 1997.
-    The fixture has no partsupp/ps_availqty, so "stock" stands in as
-    the part's lifetime shipped quantity per supplier and the Q20
-    comparison ``ps_availqty > 0.5 × year_qty`` becomes
-    ``year_qty × 2 > total_qty`` with a lifetime-volume support floor
-    (``q_total >= 80``, without which single-shipment pairs trivially
-    pass and the filter selects every supplier) — EXACT integer
-    arithmetic (fixture quantities are integral), never a 0.5× float
-    product.
-
-    The shape is Q20's planner exercise: a part-name IN subquery
-    FEEDING a grouped HAVING-style derived table, itself feeding a
-    supplier IN — Catalyst must turn both INs into semi-joins and
-    push the part filter below the lineitem aggregate.
-
-    Plan: part filter broadcasts into the lineitem scan (semi join);
-    ONE (suppkey, partkey) hash agg with the year split as conditional
-    partials; the qualifying supplier set broadcasts into the
-    supplier⋈nation probe. No shuffle carries raw lineitem rows past
-    the first agg."""
-    from nchu_bigdata_spark.queries.subqueries import _views
-
-    _views(spark, sf_dir, "supplier", "nation", "lineitem", "part")
-    return spark.sql(
-        """
-        SELECT s.s_name, n.n_name AS nation
-        FROM supplier s
-        JOIN nation n ON n.n_nationkey = s.s_nationkey
-        WHERE s.s_suppkey IN (
-            SELECT y.l_suppkey
-            FROM (
-                SELECT l.l_suppkey, l.l_partkey,
-                       SUM(CASE WHEN l.l_shipdate >= TIMESTAMP '1997-01-01'
-                                 AND l.l_shipdate <  TIMESTAMP '1998-01-01'
-                                THEN l.l_quantity ELSE 0 END) AS q_year,
-                       SUM(l.l_quantity) AS q_total
-                FROM lineitem l
-                WHERE l.l_partkey IN (
-                    SELECT p.p_partkey FROM part p
-                    WHERE p.p_name LIKE 'small%'
-                )
-                GROUP BY l.l_suppkey, l.l_partkey
-            ) y
-            WHERE y.q_total >= 80 AND y.q_year * 2 > y.q_total
-        )
-        ORDER BY s.s_name
-        """
-    )
 
 
 # --------------------------------------------------------------------------
 # tpch_q2 — minimum-cost supplier (round 7; psup stand-in documented)
 # --------------------------------------------------------------------------
 
-_Q2_SQL = """
+# TPC-H Q2 shape. The fixture has no partsupp, so unit cost derives
+# from lineitem per (part, supplier). The correlated float EQUALITY is
+# safe because both sides select from one set of bit-identical doubles:
+# MIN is exact selection over the same IEEE division on both engines
+# (the tpch_q15 tie-safety argument).
+register_sql(
+    "tpch_q2",
+    tags=("b11",),
+    oracle="""
         WITH psup AS (
             SELECT l.l_partkey, l.l_suppkey,
                    MIN(l.l_extendedprice / l.l_quantity) AS unit_cost
@@ -972,35 +697,8 @@ _Q2_SQL = """
           )
         ORDER BY s.s_acctbal DESC, n.n_name, s.s_name, p.p_partkey
         LIMIT 100
-"""
-
-
-@register("tpch_q2", tags=("b11",), oracle=_Q2_SQL)
-def tpch_q2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q2 shape: minimum-cost supplier — for each size-10 part,
-    the ASIA supplier(s) achieving the minimum unit cost, ties
-    preserved, top-100 by account balance. The fixture has no
-    partsupp, so the supply-cost table derives from lineitem:
-    ``unit_cost = MIN(l_extendedprice / l_quantity)`` per (part,
-    supplier) — the same derived-view-queried-twice discipline as
-    tpch_q15.
-
-    Determinism: unit_cost is an IEEE division of identical doubles,
-    MIN is exact selection (no arithmetic), and the correlated
-    equality compares values produced by the SAME derivation on both
-    engines — a float EQUALITY that is safe precisely because both
-    sides select from one shared set of bit-identical doubles (the
-    q15 tie-safety argument).
-
-    Plan: Catalyst decorrelates the per-part scalar MIN into a
-    region-filtered aggregate on l_partkey + an equi-join — the
-    derived psup table is the one lineitem-sized shuffle (reused
-    logically on both branches); part/supplier/nation/region all
-    broadcast; the final top-100 is a TakeOrderedAndProject heap."""
-    from nchu_bigdata_spark.queries.subqueries import _views
-
-    _views(spark, sf_dir, "lineitem", "part", "supplier", "nation", "region")
-    return spark.sql(_Q2_SQL)
+""",
+)
 
 
 # --------------------------------------------------------------------------

@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from nchu_bigdata_spark.compat import dround
-from nchu_bigdata_spark.io import table
+from nchu_bigdata_spark.io import sql_over_tables, table
 from nchu_bigdata_spark.registry import register
 
 
@@ -177,12 +177,13 @@ def udtf_python_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
                 yield w, i, len(w)
 
     spark.udtf.register("tokenize_with_pos", TokenizeWithPos)
-    table(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    return spark.sql(
+    return sql_over_tables(
+        spark,
+        sf_dir,
         """
         SELECT d.doc_id, t.word, t.pos, t.word_len
         FROM documents d, LATERAL tokenize_with_pos(d.text) t
-        """
+        """,
     )
 
 

@@ -12,10 +12,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from nchu_bigdata_spark.compat import dround
 from nchu_bigdata_spark.io import table
 from nchu_bigdata_spark.materialize import range_pid_frozen
-from nchu_bigdata_spark.registry import register
+from nchu_bigdata_spark.registry import register, register_sql
 
 
 @register(
@@ -55,7 +54,7 @@ def win_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+register_sql(
     "win_lag_lead",
     tags=("b5",),
     oracle="""
@@ -66,19 +65,9 @@ def win_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
         WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
     """,
 )
-def win_lag_lead(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """lag/lead per user ordered by time (day-over-day-delta shape)."""
-    ev = table(spark, sf_dir, "events")
-    w = W.partitionBy("user_id").orderBy("ts", "event_id")
-    return ev.select(
-        "event_id",
-        "user_id",
-        dround(F.col("value") - F.lag("value", 1).over(w), 4).alias("delta_prev"),
-        F.lead("event_type", 1).over(w).alias("next_type"),
-    )
 
 
-@register(
+register_sql(
     "win_frame_avg",
     tags=("b5",),
     oracle="""
@@ -90,15 +79,6 @@ def win_lag_lead(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM events
     """,
 )
-def win_frame_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Moving average over a 4-row frame (hourly-smoothing shape)."""
-    ev = table(spark, sf_dir, "events")
-    w = W.partitionBy("user_id").orderBy("ts", "event_id").rowsBetween(-3, 0)
-    return ev.select(
-        "event_id",
-        "user_id",
-        F.round(F.avg("value").over(w), 4).cast("decimal(18,4)").alias("moving_avg"),
-    )
 
 
 @register(
@@ -128,7 +108,9 @@ def win_argmin(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+# The running sum is decimal-exact, so partial-order differences can't
+# perturb the hash.
+register_sql(
     "win_running_total",
     tags=("b5",),
     oracle="""
@@ -140,23 +122,6 @@ def win_argmin(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM orders
     """,
 )
-def win_running_total(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cumulative sum per customer (decimal-exact so partial-order
-    differences can't perturb the hash)."""
-    o = table(spark, sf_dir, "orders")
-    w = (
-        W.partitionBy("o_custkey")
-        .orderBy("o_orderdate", "o_orderkey")
-        .rowsBetween(W.unboundedPreceding, 0)
-    )
-    return o.select(
-        "o_orderkey",
-        "o_custkey",
-        F.sum(F.col("o_totalprice").cast("decimal(20,6)"))
-        .over(w)
-        .cast("decimal(38,6)")
-        .alias("running_spend"),
-    )
 
 
 @register(

@@ -6,6 +6,15 @@ Every operator the engine claims is registered here with
   * a Spark implementation ``(spark, sf_dir) -> DataFrame``, and
   * (when SQL-expressible) the equivalent ANSI SQL for the DuckDB oracle.
 
+There are two registration forms:
+  * ``@register(name, oracle, tags)`` on a Python function that builds
+    the Spark plan;
+  * ``register_sql(name, oracle, tags)`` when Spark runs the oracle's
+    own SQL text (``io.sql_over_tables``). Use it where that text means
+    the same thing in both dialects: DataFrame code and SQL go through
+    one Catalyst pipeline, so a DataFrame body would only be a second
+    copy of the plan. The check stays cross-engine (DuckDB vs Spark).
+
 Determinism contract (the driver hashes values order-insensitively but
 exactly): every registered query must produce a bit-stable row multiset.
 See ``compat.py`` for the decimal/rounding helpers that make float
@@ -32,7 +41,6 @@ class QuerySpec:
     fn: QueryFn
     oracle: str | None  # ANSI SQL for DuckDB; None => rows-only check
     tags: tuple[str, ...] = ()
-    doc: str = ""
 
 
 REGISTRY: dict[str, QuerySpec] = {}
@@ -42,7 +50,6 @@ def register(
     name: str,
     oracle: str | None = None,
     tags: tuple[str, ...] = (),
-    doc: str = "",
 ) -> Callable[[QueryFn], QueryFn]:
     """Decorator: register a query implementation under ``name``."""
 
@@ -94,11 +101,23 @@ def register(
             fn=final_fn,
             oracle=finalize_oracle(oracle) if oracle is not None else None,
             tags=tags,
-            doc=doc or (fn.__doc__ or ""),
         )
         return fn
 
     return deco
+
+
+def register_sql(name: str, oracle: str, tags: tuple[str, ...] = ()) -> None:
+    """Register ``name`` with the oracle's SQL text as its Spark
+    implementation: the same pins, output layer and run as ``register``,
+    over the testdata tables bound by ``io.sql_over_tables``."""
+    from nchu_bigdata_spark.io import sql_over_tables
+
+    def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
+        return sql_over_tables(spark, sf_dir, oracle)
+
+    fn.__name__ = name
+    register(name, oracle, tags)(fn)
 
 
 # Driver presentation order. The driver checks the FIRST 50 ids each

@@ -7,13 +7,17 @@ from __future__ import annotations
 
 import pytest
 
-from nchu_bigdata_spark.registry import load_all_queries
+from nchu_bigdata_spark.registry import load_all_queries, register_sql
 
 from tests.helpers import assert_df_matches_oracle
 
 SPECS = load_all_queries()
 ORACLE_IDS = sorted(n for n, s in SPECS.items() if s.oracle)
 ROWS_ONLY_IDS = sorted(n for n, s in SPECS.items() if not s.oracle)
+# ids served from their oracle's SQL text: the body is register_sql's own
+SQL_SERVED_IDS = sorted(
+    n for n, s in SPECS.items() if s.fn.__wrapped__.__module__ == register_sql.__module__
+)
 
 
 @pytest.mark.parametrize("name", ORACLE_IDS)
@@ -118,18 +122,46 @@ def test_queries_immune_to_caller_session_defaults(spark, sf_dir):
     Spark 4 ships ANSI on; a driver box may sit in any timezone — must
     produce byte-identical results to the engine's own session. fn_date
     is the most TZ-sensitive query (to_date/year/dayofweek buckets);
-    agg_hash covers decimal aggregation under ANSI."""
+    agg_hash covers decimal aggregation under ANSI; win_lag_lead orders
+    events by ts, with its SQL text analyzed under the registry's pins."""
     from tests.helpers import canon_rows
 
     hostile = spark.newSession()
     hostile.conf.set("spark.sql.ansi.enabled", "true")
     hostile.conf.set("spark.sql.session.timeZone", "Asia/Taipei")
-    for name in ("fn_date", "agg_hash"):
+    for name in ("fn_date", "agg_hash", "win_lag_lead"):
         base = SPECS[name].fn(spark, sf_dir)
         other = SPECS[name].fn(hostile, sf_dir)
         rows_a = canon_rows(base.columns, [tuple(r) for r in base.collect()])
         rows_b = canon_rows(other.columns, [tuple(r) for r in other.collect()])
         assert rows_a == rows_b, name
+
+
+def test_queries_leave_caller_temp_views_alone(spark, duck, sf_dir):
+    """SQL text that names a testdata table must read that table, not a
+    caller's temp view of the same name, and must not replace the view.
+    Every table name is a decoy view with zero rows in a fresh session;
+    each SQL-served id, and the three ids that run their own Spark SQL,
+    must still match the oracle, and the decoys must be left as they
+    were. A base table that the FROM/JOIN binding misses reads its empty
+    decoy and fails the oracle check."""
+    from nchu_bigdata_spark.io import SCHEMAS, TABLES
+
+    caller = spark.newSession()
+    for t in TABLES:
+        caller.createDataFrame([], SCHEMAS[t]).createOrReplaceTempView(t)
+
+    def temp_views():
+        return {v.name for v in caller.catalog.listTables() if v.isTemporary}
+
+    before = temp_views()
+    assert len(SQL_SERVED_IDS) >= 33, SQL_SERVED_IDS
+    for name in SQL_SERVED_IDS + ["tpch_q18", "sub_recursive", "udtf_python_arrow"]:
+        spec = SPECS[name]
+        assert_df_matches_oracle(spec.fn(caller, sf_dir), duck, spec.oracle, name)
+    assert temp_views() == before
+    for t in TABLES:
+        assert caller.table(t).count() == 0, t
 
 
 def test_driver_order_covers_registry_exactly():
