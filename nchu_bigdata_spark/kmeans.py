@@ -22,17 +22,19 @@ Outputs, under ``<out>/``:
   mutates its inputs.
 
 Input: ``<data>`` is one text file, read by Spark's text source
-(``read_pm25``), so every pass over it — ``fit``'s cache fill, the
-final fold, the assignments write, the representative-day pick — runs
-in the JVM without Python workers. Each line gets a ``line_id`` that
-is an **order key only**: it increases in file order but has gaps
-between partitions. It orders the final fold and breaks
-representative-day ties, and neither needs dense ids. File order holds
-because Spark places one file's splits in offset order (see
-``read_pm25``); a directory of several files has no defined line order.
+(``read_pm25``) and cached once, so no pass over it needs Python
+workers. The passes are: rounds 1..maxIter-1 of ``fit`` (one narrow
+noop-sink pass each, the first also filling the cache), the final fold,
+and the assignments write, which also observes the representative days.
+Only the fold shuffles. Each line gets a ``line_id`` that is an **order
+key only**: it increases in file order but has gaps between partitions.
+It orders the final fold and breaks representative-day ties, and
+neither needs dense ids. File order holds because Spark places one
+file's splits in offset order (see ``read_pm25``); a directory of
+several files has no defined line order.
 
 Bit-reproducibility: the intermediate Lloyd iterations run on the
-distributed fit (``operators/kmeans.py`` — Summarizer partial aggregates,
+distributed fit (``operators/kmeans.py`` — Summarizer partial summaries,
 order-independent to ~1 ulp), but the FINAL iteration's centroid means
 are recomputed with a **deterministic sequential fold in input-line
 order**, which reproduces the reference's single-reducer summation order
@@ -56,7 +58,7 @@ from __future__ import annotations
 import os
 import sys
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 STATION = "大里"  # hardcoded by the reference, src/Kmeans.java:131
@@ -76,16 +78,17 @@ def read_pm25(spark: SparkSession, path: str) -> DataFrame:
     line reader emits lines in order. A directory of several files
     gives no such guarantee. Empty and space-only lines are dropped;
     ``\n``, ``\r\n`` and ``\r`` endings all end a line."""
-    df = spark.read.text(path).select(
-        F.col("value").alias("line"),
-        F.monotonically_increasing_id().alias("line_id"),
-    ).filter(F.length(F.trim("line")) > 0)
-    fields = F.split("line", ",")
-    return df.select(
-        "line_id",
-        "line",
-        fields.getItem(0).alias("obs_date"),
-        F.slice(fields, 4, 24 * 4096).cast("array<double>").alias("features"),
+    return (
+        spark.read.text(path)
+        .selectExpr("value AS line", "monotonically_increasing_id() AS line_id")
+        .filter("length(trim(line)) > 0")
+        .selectExpr(
+            "line_id",
+            "line",
+            "split(line, ',')[0] AS obs_date",
+            f"CAST(slice(split(line, ','), 4, {24 * 4096}) AS array<double>)"
+            " AS features",
+        )
     )
 
 
@@ -109,23 +112,22 @@ def sequential_cluster_means(labeled: DataFrame) -> DataFrame:
     loop, ``src/Kmeans.java:101-112``): posexplode → per (cluster, dim)
     collect values sorted by line_id → left fold. Returns
     (cluster, pos, mv, n)."""
-    ex = labeled.select(
-        "cluster", "line_id", F.posexplode("features").alias("pos", "v")
-    )
-    return (
-        ex.groupBy("cluster", "pos")
-        .agg(
-            F.aggregate(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("line_id", "v"))),
-                    lambda s: s.v,
-                ),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            ).alias("s"),
-            F.count(F.lit(1)).alias("n"),
+    return labeled.sparkSession.sql(
+        """
+        SELECT cluster, pos, s / n AS mv, n FROM (
+            SELECT cluster, pos,
+                   aggregate(
+                       transform(array_sort(collect_list(struct(line_id, v))),
+                                 e -> e.v),
+                       0.0D, (acc, x) -> acc + x) AS s,
+                   count(1) AS n
+            FROM (SELECT cluster, line_id,
+                         posexplode(features) AS (pos, v)
+                  FROM {labeled})
+            GROUP BY cluster, pos
         )
-        .select("cluster", "pos", (F.col("s") / F.col("n")).alias("mv"), "n")
+        """,
+        labeled=labeled,
     )
 
 
@@ -160,61 +162,67 @@ def run(
     labeling pass with the final centers."""
     from nchu_bigdata_spark.operators import kmeans as km
 
-    df = read_pm25(spark, data_path)
+    df = read_pm25(spark, data_path).cache()
     init = read_centers(centers_path)
+    try:
+        # Rounds 1..max_iter-1 on the distributed fit; the last round's
+        # means are recomputed with the deterministic fold for bit-parity.
+        if max_iter > 1:
+            prev = km.fit(
+                df, init, feature_col="features", metric="sq_euclidean_abs",
+                max_iter=max_iter - 1, tol=None,
+            ).centers
+        else:
+            prev = [list(map(float, c)) for c in init]
 
-    # Rounds 1..max_iter-1 on the distributed fit; the last round's
-    # means are recomputed with the deterministic fold for bit-parity.
-    if max_iter > 1:
-        prev = km.fit(
-            df, init, feature_col="features", metric="sq_euclidean_abs",
-            max_iter=max_iter - 1, tol=None,
-        ).centers
-    else:
-        prev = [list(map(float, c)) for c in init]
+        assigned = km.assign(df, prev, "features", "sq_euclidean_abs")
+        means = sequential_cluster_means(assigned).collect()  # k×dim scalars
+        dim = len(prev[0])
+        centers: dict[int, list[float]] = {}
+        for r in means:
+            vec = centers.setdefault(r["cluster"], [0.0] * dim)
+            vec[r["pos"]] = float(r["mv"])
+        # Empty clusters keep their previous centroid (reference reducers
+        # never see empty groups).
+        for i, c in enumerate(prev, start=1):
+            centers.setdefault(i, list(c))
 
-    assigned = km.assign(df, prev, "features", "sq_euclidean_abs")
-    means = sequential_cluster_means(assigned).collect()  # k×dim scalars
-    dim = len(prev[0])
-    centers: dict[int, list[float]] = {}
-    for r in means:
-        centers.setdefault(r["cluster"], [0.0] * dim)[r["pos"]] = float(r["mv"])
-    # Empty clusters keep their previous centroid (reference reducers
-    # never see empty groups).
-    for i, c in enumerate(prev, start=1):
-        centers.setdefault(i, list(c))
-
-    # Final map-only labeling with the final centers; ``d`` is each
-    # row's distance to its own (nearest) center.
-    final_centers = [centers[i] for i in sorted(centers)]
-    labeled = km.assign(
-        df, final_centers, "features", "sq_euclidean_abs", dist_col="d"
-    )
-    (
-        labeled.select(
-            F.concat_ws("\t", F.col("cluster").cast("string"), F.col("line"))
+        # Final map-only labeling with the final centers; ``d`` is each
+        # row's distance to its own (nearest) center.
+        cids = sorted(centers)
+        final_centers = [centers[i] for i in cids]
+        labeled = km.assign(
+            df, final_centers, "features", "sq_euclidean_abs", dist_col="d"
         )
-        .write.mode("overwrite")
-        .text(os.path.join(out_dir, "assignments"))
-    )
+        # Representative day per cluster, observed on the write itself:
+        # CORRECT argmin of the reference's rep-day metric (plain
+        # squared distance on abs values, src/Kmeans.java:119-124) — the
+        # same metric as the assignment, so ``d`` is the distance to the
+        # row's own center. Ties break to the lowest line id. An empty
+        # cluster has no rows to argmin over: its min_by is null and its
+        # date empty.
+        reps_obs = Observation()
+        rep_days = ", ".join(
+            f"min_by(obs_date, CASE WHEN cluster = {cid}"
+            " THEN struct(d, line_id) END)"
+            for cid in cids
+        )
+        (
+            labeled.observe(reps_obs, F.expr(f"array({rep_days})").alias("reps"))
+            .selectExpr("concat_ws('\t', CAST(cluster AS STRING), line)")
+            .write.mode("overwrite")
+            .text(os.path.join(out_dir, "assignments"))
+        )
+        reps = {
+            cid: date or "" for cid, date in zip(cids, reps_obs.get["reps"])
+        }
 
-    # Representative day per cluster: CORRECT argmin of the reference's
-    # rep-day metric (plain squared distance on abs values,
-    # src/Kmeans.java:119-124) — the same metric as the assignment, so
-    # the labeling's own ``d`` is the distance to the cluster's center.
-    # Ties break to the lowest line id; one agg job for all clusters.
-    rep_rows = (
-        labeled.groupBy("cluster")
-        .agg(F.min_by("obs_date", F.struct("d", "line_id")).alias("obs_date"))
-        .collect()
-    )
-    reps = {int(r["cluster"]): r["obs_date"] for r in rep_rows}
-    for cid in centers:  # empty clusters have no rows to argmin over
-        reps.setdefault(cid, "")
-
-    with open(os.path.join(out_dir, "centers.txt"), "w", encoding="utf-8") as f:
-        for line in format_center_lines(reps, centers):
-            f.write(line + "\n")
+        centers_txt = os.path.join(out_dir, "centers.txt")
+        with open(centers_txt, "w", encoding="utf-8") as f:
+            for line in format_center_lines(reps, centers):
+                f.write(line + "\n")
+    finally:
+        df.unpersist()
 
 
 def main(argv: list[str] | None = None) -> int:

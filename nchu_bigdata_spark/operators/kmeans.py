@@ -8,21 +8,27 @@ buffers an entire cluster in RAM (``:93-97``); new centroids are written
 back to HDFS by truncate-and-copy (``:259-276``).
 
 This design: centroids are a k-row Python list embedded into the plan as
-*literals*, so
+one k×dim *literal*, so
 
   * assignment is a pure projection — no join, no shuffle, no side-input
-    I/O; whole-stage codegen evaluates k distances per row;
-  * the update is one fused hash agg whose vector mean is a
-    ``Summarizer`` typed aggregator — partial aggregation means only
-    k×dim partial sums cross the shuffle (never raw vectors), and the
-    plan stays constant-size in dim so Catalyst re-planning per
-    iteration is O(k), not O(k·dim);
-  * per iteration exactly one ``collect()`` of k centroid rows crosses
-    the cluster↔driver boundary (the input DataFrame is cached once and
-    re-projected, so lineage never grows — no checkpoint needed).
+    I/O; one constant-shape SQL expression maps a distance lambda over
+    the literal centers and takes the nearest;
+  * each Lloyd round is ONE narrow pass with no Exchange: the assigned
+    rows are written to the ``noop`` sink under ``observe``, whose
+    metrics are k ``Summarizer`` vector means (weight = cluster
+    membership, each guarded by its member count) and the total cost.
+    The plan stays constant-size in dim. Each task folds its rows into
+    partial summaries and the partials merge at the driver through the
+    observation's accumulator — the shape of MLlib's per-partition
+    aggregate — so only k×dim partial sums per task leave the
+    executors, never raw vectors;
+  * per round exactly one driver round trip of k centroid summaries
+    (the observed metrics), and nothing data-sized on the driver (the
+    input DataFrame is cached once and re-projected, so lineage never
+    grows — no checkpoint needed).
 
-At 100 TB: the scan is the only big cost per iteration and it's
-embarrassingly parallel; shuffle volume is k·dim·partitions doubles.
+At 100 TB: the scan is the only big cost per round and it is
+embarrassingly parallel; the driver merges k·dim doubles per task.
 
 Metrics (SURVEY.md §2.A):
   * ``sq_euclidean``      — Σ (a−b)²  (textbook)
@@ -39,9 +45,9 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.ml.functions import array_to_vector
+from pyspark.ml.functions import array_to_vector, vector_to_array
 from pyspark.ml.stat import Summarizer
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from nchu_bigdata_spark.compat import dround, sql_dround
@@ -73,18 +79,16 @@ def _dlit(v: float) -> str:
     return repr(float(v)) + "D"
 
 
-def distance_sql(center: list[float], vec_sql: str, metric: Metric) -> str:
-    """Distance from an array-typed SQL expression to one literal
-    center, as a SQL string — evaluated entirely inside codegen.
+def distance_sql(vec_sql: str, center_sql: str, metric: Metric) -> str:
+    """Distance between two array-typed SQL expressions, as a SQL
+    string — a ``zip_with`` of per-dimension terms summed left to right
+    by ``aggregate``.
 
     Built as text rather than stacked Column objects: a k×dim
     expression tree costs thousands of driver Py4J round-trips per
-    ``assign`` (measured ~0.4 s/iteration at k=4, dim=64 — comparable
-    to the job itself), while one ``F.expr`` string is a single call
-    parsed JVM-side."""
-    c = "array(" + ", ".join(_dlit(v) for v in center) + ")"
+    ``assign``, while one SQL string is a single call parsed JVM-side."""
     return (
-        f"aggregate(zip_with({vec_sql}, {c},"
+        f"aggregate(zip_with({vec_sql}, {center_sql},"
         f" (x, y) -> {_pair_term_sql(metric)}),"
         f" 0.0D, (acc, v) -> acc + v)"
     )
@@ -100,31 +104,30 @@ def assign(
 ) -> DataFrame:
     """Nearest-centroid assignment (ref A5–A8) as ONE projection.
 
-    Builds ``array_min(array(struct(dist_i, i)))`` over the k literal
-    centers: struct ordering gives argmin with lowest-index tie-break.
-    Cluster ids are 1-based like the reference's ``index+1``
-    (``src/Kmeans.java:79``).
+    ``array_min(transform(<centers>, (c, i) -> struct(dist, i + 1)))``
+    over one k×dim literal: struct ordering gives argmin with
+    lowest-index tie-break. Cluster ids are 1-based like the reference's
+    ``index+1`` (``src/Kmeans.java:79``).
 
-    The whole projection is one ``F.expr`` SQL string (see
-    ``distance_sql``): plan construction is a single Py4J call instead
-    of O(k·dim) round-trips — at k=4/dim=64 that halves per-iteration
-    wall time in ``fit`` (0.37 s build → ~0.01 s).
+    The expression has the same shape for every k and dim (only the
+    literal grows), and the whole projection is one ``selectExpr`` — a
+    single Py4J call instead of O(k·dim) round-trips.
     """
     vec_sql = f"transform(`{feature_col}`, v_ -> CAST(v_ AS DOUBLE))"
-    pairs = ", ".join(
-        f"named_struct('dist', {distance_sql(c, vec_sql, metric)},"
-        f" 'idx', {i + 1})"
-        for i, c in enumerate(centers)
+    lit = "array(" + ", ".join(
+        "array(" + ", ".join(_dlit(v) for v in c) + ")" for c in centers
+    ) + ")"
+    best = (
+        f"array_min(transform({lit}, (c_, i_) -> named_struct("
+        f"'dist', {distance_sql(vec_sql, 'c_', metric)}, 'idx', i_ + 1)))"
     )
-    best = f"array_min(array({pairs}))"
     # One select (not stacked withColumn): every Dataset construction
-    # runs the analyzer eagerly over the full k×dim expression, so two
-    # withColumns means two analysis passes of the big plan.
-    cols = [F.col(c) for c in df.columns if c not in (cluster_col, dist_col)]
-    cols.append(F.expr(f"({best}).idx").alias(cluster_col))
+    # runs the analyzer eagerly, so two withColumns means two passes.
+    exprs = [f"`{c}`" for c in df.columns if c not in (cluster_col, dist_col)]
+    exprs.append(f"{best}.idx AS `{cluster_col}`")
     if dist_col:
-        cols.append(F.expr(f"({best}).dist").alias(dist_col))
-    return df.select(*cols)
+        exprs.append(f"{best}.dist AS `{dist_col}`")
+    return df.selectExpr(*exprs)
 
 
 @dataclass
@@ -153,37 +156,52 @@ def fit(
 
     Empty clusters keep their previous centroid (the reference can never
     emit one — Hadoop reducers only see non-empty groups).
+
+    Each round is one narrow noop-sink pass whose observed metrics are
+    the k means, so no round shuffles or collects. A cluster's mean is
+    guarded by its ``count_if``: an empty summary must not be evaluated,
+    since Summarizer raises on it and the observation would never
+    complete.
     """
     df = df.select(
         array_to_vector(
-            F.transform(F.col(feature_col), lambda x: x.cast("double"))
+            F.expr(f"transform(`{feature_col}`, x -> CAST(x AS DOUBLE))")
         ).alias("_vec"),
-        F.col(feature_col),
+        feature_col,
     ).cache()
     try:
         centers = [list(map(float, c)) for c in init_centers]
+        # Built once per fit; every round observes the same columns.
+        # Summarizer keeps the plan constant-size in dim (per-dim sums
+        # would make Catalyst analyse an O(k·dim)-wide aggregate every
+        # round), and it skips zero-weight rows, so weighting by
+        # membership gives the same online mean as a per-cluster group.
+        summary, vec = Summarizer.metrics("mean"), F.col("_vec")
+        stats = [F.expr("sum(_dist)").alias("cost")]
+        for i in range(1, len(centers) + 1):
+            mean = summary.summary(
+                vec, F.expr(f"CAST(cluster = {i} AS DOUBLE)")
+            ).getField("mean")
+            stats.append(
+                F.when(F.expr(f"count_if(cluster = {i}) > 0"),
+                       vector_to_array(mean)).alias(f"mean{i}")
+            )
         costs: list[float] = []
         converged = False
         it = 0
         for it in range(1, max_iter + 1):
-            assigned = assign(df, centers, feature_col, metric, dist_col="_dist")
-            # ONE fused hash-agg per iteration: Summarizer.mean is a
-            # TypedImperativeAggregate, so per-partition partials of
-            # (k × dim) doubles merge map-side and only k rows reach the
-            # driver. Crucially the plan size is CONSTANT in dim —
-            # per-dim sum columns would make Catalyst re-plan/codegen an
-            # O(dim)-wide aggregate every iteration, which dominates
-            # wall time at small SF and planning time at any SF.
-            rows = assigned.groupBy("cluster").agg(
-                Summarizer.mean(F.col("_vec")).alias("mean"),
-                F.sum("_dist").alias("cost"),
-            ).collect()
-            new_centers = list(centers)
-            cost = 0.0
-            for r in rows:
-                new_centers[r["cluster"] - 1] = [float(v) for v in r["mean"]]
-                cost += float(r["cost"])
-            costs.append(cost)
+            obs = Observation()
+            (
+                assign(df, centers, feature_col, metric, dist_col="_dist")
+                .observe(obs, *stats)
+                .write.format("noop").mode("overwrite").save()
+            )
+            m = obs.get
+            new_centers = [
+                c if m[f"mean{i}"] is None else [float(v) for v in m[f"mean{i}"]]
+                for i, c in enumerate(centers, start=1)
+            ]
+            costs.append(float(m["cost"] or 0.0))
             delta = sum(
                 (a - b) * (a - b)
                 for nc, oc in zip(new_centers, centers)

@@ -204,7 +204,7 @@ def _cos_lit_sql(v_col: str, n_col: str, cv: list[float], cn: float) -> str:
     """round(cos, 6) against ONE literal centroid, as a SQL string —
     ``repr`` round-trips IEEE doubles exactly, and one ``F.expr`` parse
     beats O(k·dim) Column-API Py4J round-trips (same rationale as
-    ``operators/kmeans.py distance_sql``)."""
+    ``operators/kmeans.py`` ``_dlit`` and ``distance_sql``)."""
     c = "array(" + ", ".join(repr(float(x)) + "D" for x in cv) + ")"
     return (
         f"round(aggregate(zip_with({v_col}, {c}, (x, y) -> x * y), 0.0D,"

@@ -14,13 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from nchu_bigdata_spark.compat import (
-    davg,
-    dround,
-    dsum,
-    sql_davg,
-    sql_dsum,
-)
+from nchu_bigdata_spark.compat import davg, dsum
 from nchu_bigdata_spark.io import parallel_table, table
 from nchu_bigdata_spark.materialize import range_pid_frozen, shared_intermediate
 from nchu_bigdata_spark.registry import register, register_sql

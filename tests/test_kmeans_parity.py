@@ -18,6 +18,7 @@ labeling pass. Cluster ids are 1-based (src/Kmeans.java:79).
 
 from __future__ import annotations
 
+import contextlib
 import os
 
 import pytest
@@ -452,3 +453,147 @@ def test_toy_points_converge(spark):
     assert res.converged
     for a, b in zip(res.costs, res.costs[1:]):
         assert b <= a + 1e-9
+
+
+def _init_centers() -> list[list[float]]:
+    return _parse_centers_file(
+        os.path.join(FIXTURES, "pm25.cluster.center.conf.txt")
+    )
+
+
+@contextlib.contextmanager
+def _job_group(spark, group: str):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group, False)
+    try:
+        yield
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+
+
+def _group_jobs(spark, group: str) -> list[tuple[int, int, list[int]]]:
+    """(SQL execution id, job id, shuffle-write bytes per stage) of each
+    job in ``group``, from the status stores, in job order."""
+    sc = spark.sparkContext
+    jobs = set(sc.statusTracker().getJobIdsForGroup(group))
+    store = sc._jsc.sc().statusStore()
+    scala = spark._jvm.scala.jdk.javaapi.CollectionConverters
+    sql_store = spark._jsparkSession.sharedState().statusStore()
+    execution_of = {
+        int(j): e.executionId()
+        for e in scala.asJava(sql_store.executionsList())
+        for j in scala.asJava(e.jobs()).keySet()
+    }
+    return [
+        (
+            execution_of[j], j,
+            [store.lastStageAttempt(s).shuffleWriteBytes()
+             for s in sc.statusTracker().getJobInfo(j).stageIds],
+        )
+        for j in sorted(jobs)
+    ]
+
+
+def test_fit_rounds_do_not_shuffle(spark):
+    """Each Lloyd round is one job of one stage that writes no shuffle
+    bytes: the k centroid summaries come back as observed metrics of a
+    narrow pass, not through a groupBy."""
+    with _job_group(spark, "kmeans-fit-rounds"):
+        kmeans.fit(
+            _load_pm25(spark), _init_centers(), feature_col="features",
+            metric="sq_euclidean_abs", max_iter=3,
+        )
+    jobs = _group_jobs(spark, "kmeans-fit-rounds")
+    assert len(jobs) == 3, jobs
+    for _, job, stage_shuffle in jobs:
+        assert stage_shuffle == [0], (job, stage_shuffle)
+
+
+def test_cli_shuffles_only_in_the_fold(spark, tmp_path):
+    """A full CLI run is maxIter-1 narrow rounds, the fold, and the
+    assignments write, one SQL execution each. Only the fold shuffles,
+    and the representative-day pick rides on the write: that execution
+    is one job of one stage."""
+    from nchu_bigdata_spark import kmeans as cli
+
+    out = str(tmp_path / "kmeans_out")
+    os.makedirs(out)
+    with _job_group(spark, "kmeans-cli"):
+        cli.run(
+            spark, os.path.join(FIXTURES, "pm25.txt"),
+            os.path.join(FIXTURES, "pm25.cluster.center.conf.txt"), out, 5,
+        )
+    jobs = _group_jobs(spark, "kmeans-cli")
+    executions: dict[int, list[list[int]]] = {}
+    for ex, _, stage_shuffle in jobs:
+        executions.setdefault(ex, []).append(stage_shuffle)
+    order = sorted(executions)
+    assert len(order) == 4 + 2, executions
+    shuffling = [ex for ex in order if any(map(any, executions[ex]))]
+    assert shuffling == [order[-2]], executions  # the fold
+    for ex in order[:4] + order[-1:]:
+        assert executions[ex] == [[0]], executions
+    assert sorted(_cli_outputs(out)[0]) == sorted(
+        _fixture_lines("golden_assignments.txt")
+    )
+
+
+def test_fit_result_does_not_depend_on_partitioning(spark):
+    """Per-task summaries merge at the driver in task completion order,
+    so 4 partitions may move the centers by ulps but not the labels."""
+    df = _load_pm25(spark)
+    parts = df.repartition(4)
+    assert parts.rdd.getNumPartitions() == 4
+    fits = [
+        kmeans.fit(d, _init_centers(), feature_col="features",
+                   metric="sq_euclidean_abs", max_iter=5)
+        for d in (df.coalesce(1), parts)
+    ]
+    for c1, c4 in zip(fits[0].centers, fits[1].centers):
+        assert c4 == pytest.approx(c1, rel=1e-12, abs=0.0)
+
+    def labels(centers):
+        out = kmeans.assign(df, centers, "features", "sq_euclidean_abs")
+        return {r["obs_date"]: r["cluster"] for r in out.collect()}
+
+    one = labels(fits[0].centers)
+    assert len(one) == 365
+    assert labels(fits[1].centers) == one
+
+
+def test_empty_cluster_keeps_its_center(spark, tmp_path):
+    """A fifth init center far from every row never gains a member:
+    ``fit`` carries it unchanged through every round, the other four
+    still reach the golden centroids, and the CLI writes its line with
+    the carried values and an empty representative date."""
+    from nchu_bigdata_spark import kmeans as cli
+
+    far = [1e6] * 24
+    res = kmeans.fit(
+        _load_pm25(spark), _init_centers() + [far], feature_col="features",
+        metric="sq_euclidean_abs", max_iter=5,
+    )
+    assert res.centers[4] == far
+    for ours, (_, gold) in zip(res.centers, _parse_golden_centers()):
+        assert ours == pytest.approx(gold, rel=1e-9)
+
+    conf = tmp_path / "centers5.txt"
+    conf_lines = _fixture_lines("pm25.cluster.center.conf.txt")
+    head = ",".join(conf_lines[0].split(",")[:3])
+    conf.write_text(
+        "\n".join(conf_lines + [head + "," + ",".join(map(repr, far))]) + "\n",
+        encoding="utf-8",
+    )
+    out = str(tmp_path / "kmeans_out")
+    os.makedirs(out)
+    cli.run(spark, os.path.join(FIXTURES, "pm25.txt"), str(conf), out, 5)
+    emitted, ours = _cli_outputs(out)
+    assert sorted(emitted) == sorted(_fixture_lines("golden_assignments.txt"))
+    golden = _fixture_lines("golden_centers.txt")
+    assert ours[:4] == [
+        mine.split(",", 1)[0] + "," + gold.split(",", 1)[1]
+        for mine, gold in zip(ours, golden)
+    ]
+    assert ours[4] == "\t,大里,PM25," + ", ".join(["1000000.0"] * 24)

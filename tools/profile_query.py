@@ -9,7 +9,11 @@ For each named query, separates where the wall-clock goes:
               by the run (``materialize.run_scope``) the build joins
   * exec    — the final noop-sink execution (full computation)
 
-Methodology matches bench.py (warm session, noop sink, N reps, min).
+Methodology: warm session, noop sink, N reps in one process. Each line
+shows the fastest rep (lowest build+exec, as bench.py reports the min)
+and, next to each layer, the median over the reps. Seconds from two
+processes can differ by 2×; compare two trees with reps interleaved in
+one session, not with two runs of this tool.
 
 Usage:
     python tools/profile_query.py [--sf DIR] [--reps N] query [query ...]
@@ -18,6 +22,7 @@ Usage:
 from __future__ import annotations
 
 import argparse
+import statistics
 import sys
 import time
 
@@ -118,12 +123,16 @@ def main() -> None:
                 t2 = time.perf_counter()
             rows.append((t1 - t0, t2 - t1, run.segments, calls))
         per_rep = [r[3] for r in rows]
-        rows.sort(key=lambda r: r[0] + r[1])
-        build, execu, segs, _ = rows[0]
+        med_total = statistics.median(r[0] + r[1] for r in rows)
+        med_build = statistics.median(r[0] for r in rows)
+        med_exec = statistics.median(r[1] for r in rows)
+        build, execu, segs, _ = min(rows, key=lambda r: r[0] + r[1])
         seg_total = sum(s for _, s in segs)
         print(
-            f"{name}: total={build + execu:.3f}s  build={build:.3f}s "
-            f"(segments {seg_total:.3f}s)  exec={execu:.3f}s  "
+            f"{name}: total={build + execu:.3f}s "
+            f"(median {med_total:.3f}s)  build={build:.3f}s "
+            f"(median {med_build:.3f}s, segments {seg_total:.3f}s)  "
+            f"exec={execu:.3f}s (median {med_exec:.3f}s)  "
             f"build py4j calls per rep={per_rep}"
         )
         for tag, s in segs:
